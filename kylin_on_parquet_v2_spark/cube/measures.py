@@ -125,8 +125,9 @@ def hist_build(func: FunctionDesc, name: str) -> Column:
         raise ValueError(
             f"hist bounds must be finite with non-zero width: {func.returntype}"
         )
+    col = func.parameter.replace("`", "``")  # Spark's quoteIdentifier
     b = (
-        f"least(greatest(floor((`{func.parameter}` - {float(lo)!r}D)"
+        f"least(greatest(floor((`{col}` - {float(lo)!r}D)"
         f" / {float(w)!r}D), 0), {bins - 1})"
     )
     cells = ",".join(
@@ -151,8 +152,9 @@ def hist_reagg(func: FunctionDesc, name: str) -> Column:
     constant was mostly THIS) and once per percentile-serving routed
     query. Identical expression tree, bit-identical merges."""
     bins, _lo, _hi = hist_spec(func)
+    col = name.replace("`", "``")  # Spark's quoteIdentifier
     cells = ",".join(
-        f"coalesce(sum(`{name}`[{i}]), cast(0 as bigint))" for i in range(bins)
+        f"coalesce(sum(`{col}`[{i}]), cast(0 as bigint))" for i in range(bins)
     )
     return F.expr(f"array({cells})").alias(name)
 

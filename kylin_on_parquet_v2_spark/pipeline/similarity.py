@@ -308,6 +308,9 @@ def train_ivf_centroids(
     """
     cents = ivf_centroids(n_lists, dim, seed)
     train = corpus.select(F.col(id_col), F.col(vec_col))
+    # the name vec_col resolved to, quoted like Spark's quoteIdentifier
+    # (a backtick inside it doubled) for the parsed mean aggregate below
+    vec_name = train.columns[1].replace("`", "``")
     # ``train_fraction < 1`` draws the deterministic hash sample HERE (same
     # hash_sample the callers used to apply themselves — identical rows,
     # identical centroids) and persists it across the Lloyd iterations:
@@ -339,7 +342,7 @@ def train_ivf_centroids(
             # trained centroids — are bit-identical (pinned by
             # test_r14_optimizations.py::test_lloyd_array_agg_matches_columns).
             mexpr = "array(" + ",".join(
-                f"avg(cast(element_at(`{vec_col}`, {i + 1}) as double))"
+                f"avg(cast(element_at(`{vec_name}`, {i + 1}) as double))"
                 for i in range(dim)
             ) + ")"
             means = (

@@ -18,6 +18,7 @@ import os
 import tempfile
 import threading
 from collections import Counter, OrderedDict
+from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -26,7 +27,9 @@ from kylin_on_parquet_v2_spark.cube.build import CubeBuilder, CubeInstance
 from kylin_on_parquet_v2_spark.metadata.cube import CubeDesc
 from kylin_on_parquet_v2_spark.metadata.model import DataModel
 from kylin_on_parquet_v2_spark.query.digest import (
+    AggOverUnion,
     JoinOfAggregates,
+    UnionOfAggregates,
     extract_agg_over_union,
     extract_digest,
     extract_join_digest,
@@ -35,6 +38,45 @@ from kylin_on_parquet_v2_spark.query.digest import (
 )
 from kylin_on_parquet_v2_spark.query.router import Route, execute_route, plan_route
 from kylin_on_parquet_v2_spark.session import get_spark, register_views
+
+#: the reason of a digestible query (or island) no registered cube serves
+_NO_CUBE = "no cube can serve"
+
+
+def _exc_reason(exc: Exception) -> str:
+    """An exception as a one-line reason: its class and first line."""
+    first = (str(exc).splitlines() or [""])[0]
+    return f"{type(exc).__name__}: {first}"[:200]
+
+
+@dataclass(frozen=True)
+class Decision:
+    """The routing decision of one ``sql()`` call — the reference records
+    one realization per query context and keeps why it gave up on a cube
+    (RealizationChooser.java:60-160). Fresh or memoized, a decision is
+    served by ``OlapEngine._serve`` and applied by ``OlapEngine._record``.
+
+    ``kind`` is one of:
+    - ``routed``: one cuboid serves ``plan`` (a SqlDigest);
+    - ``multi``: ``plan`` joins or set-combines aggregate islands, each
+      routed on its own (one route per island);
+    - ``pushdown``: digestible, but no cube serves it;
+    - ``undigestible``: no digest and no routable multi-context shape;
+    - ``bypass``: routing off or no cube registered — never counted or
+      memoized.
+    """
+
+    kind: str
+    plan: object = None
+    routes: tuple[Route, ...] = ()
+    #: ``routed``: the cube's lifecycle epoch when the decision was made; a
+    #: replay under another epoch plans again
+    lifecycle_epoch: int | None = None
+    #: needed-column set fed to the cube-planner workload (``routed`` and
+    #: ``pushdown``)
+    workload_cols: frozenset | None = None
+    #: why the query did not route; empty when it did
+    reason: str = ""
 
 
 class OlapEngine:
@@ -69,6 +111,9 @@ class OlapEngine:
         #: all routes taken by the last sql() call — multi-context queries
         #: (join of aggregate islands) carry one per island
         self.last_routes: list[Route] = []
+        #: the whole routing decision of the last sql() call, including the
+        #: reason a query did not route
+        self.last_decision: Decision | None = None
         #: SQL massage chain (QueryUtil.massageSql parity): applied in order
         #: before analysis; pass transformers=[] to disable.
         self.transformers = (
@@ -100,7 +145,7 @@ class OlapEngine:
         #: execution re-runs from the stored digest — hybrid tails re-read
         #: their realtime store fresh each call, so only the decision, never
         #: the data, is reused.
-        self._route_memo: "OrderedDict[tuple, tuple]" = OrderedDict()
+        self._route_memo: "OrderedDict[tuple, Decision]" = OrderedDict()
         #: workload statistics for the cube planner (CuboidStats parity):
         #: needed-dim-set -> how many queries asked for it. Recorded for
         #: every digestible query, routed or not — the planner weighs
@@ -466,8 +511,6 @@ class OlapEngine:
         digest/routing path is identical to the spelled-out query — a
         parameterized dashboard query still takes its cuboid route.
         """
-        import time as _time
-
         for t in self.transformers:
             query = t(query)
         pkey = tuple(params) if isinstance(params, list) else (
@@ -491,202 +534,154 @@ class OlapEngine:
                 self.last_route = route
                 self.last_routes = list(routes)
                 return self.spark.createDataFrame(rows, schema)
-        t_plan = _time.perf_counter()
         with self._cache_lock:
             memo = self._route_memo.get(cache_key) if not validate else None
-        if memo is not None:
-            out = self._replay_route(
-                memo, cache_key, approx_distinct, t_plan, skip_result_cache
-            )
+        if memo is not None and memo.kind in ("routed", "multi"):
+            # replay without re-analyzing the SQL or re-scoring every cube
+            decision, out = self._serve(memo, approx_distinct)
             if out is not None:
-                return out
+                self._record(decision, cache_key, replayed=True)
+                return self._maybe_cache(cache_key, out, skip_result_cache)
+            # the cubes changed under the decision: drop it and plan again
+            with self._cache_lock:
+                self._route_memo.pop(cache_key, None)
+            memo = None
         df = self.spark.sql(query, args=params) if params is not None else self.spark.sql(query)
-        self.last_route = None
-        self.last_routes = []
         if not use_cube or not self.cubes:
-            self._set_pool("heavy")
-            self._note_route_time(t_plan)
+            reason = "use_cube=False" if not use_cube else "no cube registered"
+            decision, out = Decision("bypass", reason=reason), None
+        elif memo is not None:
+            # memoized pushdown/undigestible: skip digest extraction and
+            # cube scoring — spark.sql above already produced the answer
+            decision, out = memo, None
+        else:
+            decision, out = self._decide(df, approx_distinct, approx_topn)
+        self._record(decision, cache_key, replayed=memo is not None)
+        if out is None:
             return self._maybe_cache(cache_key, df, skip_result_cache)
-        if memo is not None and memo[0] in ("pushdown", "undigestible"):
-            # memoized negative decision: skip digest extraction and cube
-            # scoring — spark.sql above already produced the answer
-            self.metrics["route_memo_hits"] += 1
-            self.metrics[memo[0]] += 1
-            if memo[0] == "pushdown":
-                self.workload[memo[1]] += 1
-            self._set_pool("heavy")
-            self._note_route_time(t_plan)
-            return self._maybe_cache(cache_key, df, skip_result_cache)
-        digest = extract_digest(df)
-        if digest is None:
-            # multi-context: a join of two independently-routable aggregate
-            # islands (the reference's one-OLAPContext-per-island model,
-            # OLAPContext.java:122-182) — route each side, join the served
-            # results
-            joined, multi = None, None
-            for kind, extract, execute in (
-                ("join", extract_join_digest, self._execute_join_digest),
-                ("union", extract_union_digest, self._execute_union_digest),
-                ("agg_union", extract_agg_over_union, self._execute_agg_over_union),
-            ):
-                obj = extract(df)
-                try:
-                    joined = execute(obj, approx_distinct) if obj is not None else None
-                except Exception:
-                    joined = None  # analysis surprise — pushdown is always right
-                    self.last_route, self.last_routes = None, []
-                if joined is not None:
-                    multi = (kind, obj)
-                    break
-            if joined is not None:
-                self.metrics["routed"] += 1
-                self.metrics["routed_multi_context"] += 1
-                self._set_pool("light")
-                self._memoize_route(cache_key, ("multi",) + multi)
-                self._note_route_time(t_plan)
-                if validate:
-                    self._assert_same(joined, df)
-                return self._maybe_cache(cache_key, joined, skip_result_cache)
-            self.metrics["undigestible"] += 1
-            self._set_pool("heavy")
-            self._memoize_route(cache_key, ("undigestible",))
-            self._note_route_time(t_plan)
-            return self._maybe_cache(cache_key, df, skip_result_cache)
-        self.workload[digest.needed_cols()] += 1
-        # realization choice (RealizationChooser parity): among all cubes
-        # that can answer, prefer exact-match hits, then the narrowest
-        # cuboid (fewest dims => fewest layout rows scanned)
-        candidates = self._plan_candidates(digest, approx_distinct, approx_topn)
-        if not candidates:
-            self.metrics["pushdown"] += 1
-            self._set_pool("heavy")
-            # keep the needed-col set so memoized replays still feed the
-            # cube-planner workload like the first execution did
-            self._memoize_route(cache_key, ("pushdown", digest.needed_cols()))
-            self._note_route_time(t_plan)
-            return self._maybe_cache(cache_key, df, skip_result_cache)
-
-        inst, route = min(candidates, key=self._route_cost)
-        self.metrics["routed"] += 1
-        self._set_pool("vip" if route.exact else "light")
-        if route.segment_reject:
-            # observability for the DimensionRangeInfo fold: how many whole
-            # segments the dim-range pruner removed from this scan
-            self.metrics["segments_range_pruned"] += len(route.segment_reject)
-        if route.exact:
-            self.metrics["exact_hits"] += 1
-        self.metrics[f"cube:{route.cube}"] += 1
-        self._memoize_route(
-            cache_key,
-            ("routed", digest, inst.desc.name, route, inst.lifecycle_epoch),
-        )
-        self._note_route_time(t_plan)
-        routed = self._execute_planned(digest, inst, route)
         if validate:
-            self._assert_same(routed, df)
-        self.last_route = route
-        self.last_routes = [route]
-        return self._maybe_cache(cache_key, routed, skip_result_cache)
+            self._assert_same(out, df)
+        return self._maybe_cache(cache_key, out, skip_result_cache)
 
-    # -- routing-decision memo (round-6 verdict item 4) ----------------------
+    # -- routing decision: decide, serve, record -----------------------------
 
-    def _memoize_route(self, key: tuple, decision: tuple) -> None:
-        # dict mutations share _cache_lock (routing itself is serialized by
-        # callers — the server holds its own lock — this only keeps the
-        # OrderedDict structurally sound under embedded concurrent use)
-        with self._cache_lock:
-            self._route_memo[key] = decision
-            self._route_memo.move_to_end(key)
-            while len(self._route_memo) > self.ROUTE_MEMO_SIZE:
-                self._route_memo.popitem(last=False)
+    def _decide(
+        self, df: DataFrame, approx_distinct: bool, approx_topn: bool
+    ) -> tuple[Decision, DataFrame | None]:
+        """Plan ``df`` from scratch and serve the plan. A digestible query
+        takes its cheapest cuboid; otherwise each island of a join or set
+        operation of aggregates routes on its own (the reference's
+        one-OLAPContext-per-island model, OLAPContext.java:122-182) and the
+        served results are combined. Returns the decision and the routed
+        answer, or None when ``spark.sql`` answers."""
+        digest = extract_digest(df)
+        if digest is not None:
+            cols = digest.needed_cols()
+            best = self._choose(digest, approx_distinct, approx_topn)
+            if best is None:
+                return Decision("pushdown", workload_cols=cols, reason=_NO_CUBE), None
+            inst, route = best
+            return self._serve(
+                Decision("routed", digest, (route,), inst.lifecycle_epoch, cols),
+                approx_distinct,
+            )
+        reason = "undigestible"
+        for extract in (extract_join_digest, extract_union_digest, extract_agg_over_union):
+            obj = extract(df)
+            if obj is None:
+                continue
+            decision, out = self._serve(Decision("multi", obj), approx_distinct)
+            if out is not None:
+                return decision, out
+            reason = decision.reason
+        return Decision("undigestible", reason=reason), None
 
-    def _note_route_time(self, t0: float) -> None:
-        """Accumulate driver-side planning time (analysis + digest + cube
-        scoring; Counter holds floats fine) — ``metrics['route_time_ms']``
-        over ``metrics['route_timed_calls']`` is the average the round-6
-        verdict asked to see."""
-        import time as _time
-
-        self.metrics["route_time_ms"] += (_time.perf_counter() - t0) * 1000.0
-        self.metrics["route_timed_calls"] += 1
-
-    def _replay_route(
-        self,
-        memo: tuple,
-        cache_key: tuple,
-        approx_distinct: bool,
-        t_plan: float,
-        skip_result_cache: bool = False,
-    ) -> DataFrame | None:
-        """Re-serve a memoized routing decision without re-analyzing the SQL
-        or re-scoring every cube. Returns None when the decision can't be
-        replayed (memo entry is dropped; caller re-plans from scratch).
-        Pushdown/undigestible decisions return None too — they still need
-        ``spark.sql`` — but the caller skips digest extraction for them via
-        the memo kind check below."""
-        kind = memo[0]
-        if kind == "routed":
-            _, digest, inst_name, route, epoch = memo
-            inst = self.cubes.get(inst_name)
-            if inst is None or inst.lifecycle_epoch != epoch:
+    def _serve(
+        self, d: Decision, approx_distinct: bool
+    ) -> tuple[Decision, DataFrame | None]:
+        """Build the routed answer of ``d``, freshly planned or memoized.
+        Returns the decision as served — a multi-context one carries the
+        routes its islands took this time — and the answer; the answer is
+        None, and the decision carries the reason, when ``d`` cannot be
+        served."""
+        if d.kind == "routed":
+            inst = self.cubes.get(d.routes[0].cube)
+            if inst is None or inst.lifecycle_epoch != d.lifecycle_epoch:
                 # the cube is gone, or its segment lifecycle moved on since
                 # the decision was frozen (merge/retention/append outside
                 # refresh_cube): the Route's segment_filters/segment_reject
                 # may be stale — a merged dir reuses an absorbed segment's
                 # name with WIDER ranges, so replaying the old reject would
-                # silently drop its rows. Drop the entry and re-plan.
-                with self._cache_lock:
-                    self._route_memo.pop(cache_key, None)
-                return None
+                # silently drop its rows
+                return replace(d, reason="stale decision"), None
+            return d, self._execute_planned(d.plan, inst, d.routes[0])
+        execute = {
+            JoinOfAggregates: self._execute_join_digest,
+            UnionOfAggregates: self._execute_union_digest,
+            AggOverUnion: self._execute_agg_over_union,
+        }[type(d.plan)]
+        routes: list[Route] = []
+        try:
+            out = execute(d.plan, approx_distinct, routes)
+        except Exception as exc:  # analysis surprise — pushdown is always right
+            return replace(d, reason=_exc_reason(exc)), None
+        if out is None:
+            return replace(d, reason=_NO_CUBE), None
+        return replace(d, routes=tuple(routes)), out
+
+    def _record(self, d: Decision, key: tuple, replayed: bool) -> None:
+        """Apply one served decision: ``last_route(s)``, the route memo,
+        the cube-planner workload and every routing metric. Fresh and
+        memoized decisions count alike; only ``route_memo_hits`` tells
+        them apart."""
+        self.last_decision = d
+        self.last_routes = list(d.routes)
+        self.last_route = d.routes[0] if d.routes else None
+        if d.kind == "bypass":
+            return
+        if replayed:
             self.metrics["route_memo_hits"] += 1
-            self.workload[digest.needed_cols()] += 1
-            self.metrics["routed"] += 1
-            if route.segment_reject:
-                self.metrics["segments_range_pruned"] += len(route.segment_reject)
+        else:
+            # dict mutations share _cache_lock (routing itself is serialized
+            # by callers — the server holds its own lock — this only keeps
+            # the OrderedDict structurally sound under embedded concurrent use)
+            with self._cache_lock:
+                self._route_memo[key] = d
+                self._route_memo.move_to_end(key)
+                while len(self._route_memo) > self.ROUTE_MEMO_SIZE:
+                    self._route_memo.popitem(last=False)
+        if d.workload_cols is not None:
+            self.workload[d.workload_cols] += 1
+        if d.kind == "pushdown":
+            self.metrics["pushdown"] += 1
+            return
+        if d.kind == "undigestible":
+            self.metrics["undigestible"] += 1
+            return
+        self.metrics["routed"] += 1
+        if d.kind == "multi":
+            self.metrics["routed_multi_context"] += 1
+        else:
+            route = d.routes[0]
             if route.exact:
                 self.metrics["exact_hits"] += 1
-            self.metrics[f"cube:{route.cube}"] += 1
-            self._set_pool("vip" if route.exact else "light")
-            routed = self._execute_planned(digest, inst, route)
-            self.last_route = route
-            self.last_routes = [route]
-            self._note_route_time(t_plan)
-            return self._maybe_cache(cache_key, routed, skip_result_cache)
-        if kind == "multi":
-            _, mkind, obj = memo
-            execute = {
-                "join": self._execute_join_digest,
-                "union": self._execute_union_digest,
-                "agg_union": self._execute_agg_over_union,
-            }[mkind]
-            self.last_route, self.last_routes = None, []
-            try:
-                joined = execute(obj, approx_distinct)
-            except Exception:
-                joined = None
-            if joined is None:  # cube set changed under the decision
-                with self._cache_lock:
-                    self._route_memo.pop(cache_key, None)
-                self.last_route, self.last_routes = None, []
-                return None
-            self.metrics["route_memo_hits"] += 1
-            self.metrics["routed"] += 1
-            self.metrics["routed_multi_context"] += 1
-            self._set_pool("light")
-            self._note_route_time(t_plan)
-            return self._maybe_cache(cache_key, joined, skip_result_cache)
-        # pushdown / undigestible: spark.sql is the answer either way — the
-        # win is skipping digest extraction + cube scoring, not analysis
-        return None
+            if route.segment_reject:
+                # observability for the DimensionRangeInfo fold: how many
+                # whole segments the dim-range pruner removed from this scan
+                self.metrics["segments_range_pruned"] += len(route.segment_reject)
+        for r in d.routes:
+            self.metrics[f"cube:{r.cube}"] += 1
 
-    def _plan_candidates(
+    def _choose(
         self, digest, approx_distinct: bool, approx_topn: bool = False
-    ) -> list:
-        """All (inst, route) pairs that can serve ``digest``. A
-        hybrid-registered cube's batch layouts are INCOMPLETE for its
-        table, so it participates only when the shape merges exactly
-        across the batch/realtime split (hybrid_servable) — otherwise it
-        stands aside entirely and pushdown reads the full source view."""
+    ) -> tuple[CubeInstance, Route] | None:
+        """Realization choice (RealizationChooser parity): the cheapest
+        (inst, route) by :meth:`_route_cost` among all cubes that can serve
+        ``digest``; None when none can. A hybrid-registered cube's batch
+        layouts are INCOMPLETE for its table, so it participates only when
+        the shape merges exactly across the batch/realtime split
+        (hybrid_servable) — otherwise it stands aside entirely and pushdown
+        reads the full source view."""
         from kylin_on_parquet_v2_spark.streaming.hybrid import (
             hybrid_columns_ok,
             hybrid_servable,
@@ -708,7 +703,7 @@ class OlapEngine:
                     continue
                 route.hybrid_tail = part.realtime_dir
             candidates.append((inst, route))
-        return candidates
+        return min(candidates, key=self._route_cost) if candidates else None
 
     def _execute_planned(self, digest, inst, route) -> DataFrame:
         hyb = self.hybrids.get(inst.desc.name)
@@ -738,13 +733,15 @@ class OlapEngine:
             inst_.desc.name,
         )
 
-    def _execute_join_digest(self, jd, approx_distinct: bool) -> DataFrame | None:
+    def _execute_join_digest(
+        self, jd, approx_distinct: bool, routes: list
+    ) -> DataFrame | None:
         """Route every island of a (possibly nested) join-of-aggregates
         independently and join the served results (reference: each
         OLAPContext picks its own realization; the join tree above runs on
         already-aggregated rows — tiny inputs, so Spark broadcasts sides).
-        None unless ALL islands route."""
-        routes: list[Route] = []
+        Appends each island's route to ``routes``; None unless ALL islands
+        route."""
         out = self._execute_island(jd, approx_distinct, routes)
         if out is None:
             return None
@@ -772,10 +769,6 @@ class OlapEngine:
             out = out.orderBy(*sort_columns(jd.sort))
         if jd.limit is not None:
             out = out.limit(jd.limit)
-        for route in routes:
-            self.metrics[f"cube:{route.cube}"] += 1
-        self.last_routes = routes
-        self.last_route = routes[0]
         return out
 
     def _execute_island(self, x, approx_distinct: bool, routes: list) -> DataFrame | None:
@@ -793,23 +786,26 @@ class OlapEngine:
                 c = df_l[a] == df_r[b]
                 cond = c if cond is None else (cond & c)
             return df_l.join(df_r, cond, x.join_type)
-        candidates = self._plan_candidates(x, approx_distinct)
-        if not candidates:
+        best = self._choose(x, approx_distinct)
+        if best is None:
             return None
-        inst, route = min(candidates, key=self._route_cost)
+        inst, route = best
         routes.append(route)
         return self._execute_planned(x, inst, route)
 
-    def _execute_union_digest(self, ud, approx_distinct: bool) -> DataFrame | None:
+    def _execute_union_digest(
+        self, ud, approx_distinct: bool, routes: list
+    ) -> DataFrame | None:
         """Route every UNION ALL branch independently (OLAPUnionRel parity:
         one context and realization per branch; UnionPlan.scala:28-44 folds
-        the served results positionally). None unless ALL branches route."""
-        dfs, routes = [], []
+        the served results positionally). Appends each branch's route to
+        ``routes``; None unless ALL branches route."""
+        dfs = []
         for d in ud.children:
-            candidates = self._plan_candidates(d, approx_distinct)
-            if not candidates:
+            best = self._choose(d, approx_distinct)
+            if best is None:
                 return None
-            inst, route = min(candidates, key=self._route_cost)
+            inst, route = best
             routes.append(route)
             dfs.append(self._execute_planned(d, inst, route))
         first_cols = dfs[0].columns
@@ -834,16 +830,14 @@ class OlapEngine:
             out = out.orderBy(*sort_columns(ud.sort))
         if ud.limit is not None:
             out = out.limit(ud.limit)
-        for route in routes:
-            self.metrics[f"cube:{route.cube}"] += 1
-        self.last_routes = routes
-        self.last_route = routes[0]
         return out
 
-    def _execute_agg_over_union(self, ad, approx_distinct: bool) -> DataFrame | None:
+    def _execute_agg_over_union(
+        self, ad, approx_distinct: bool, routes: list
+    ) -> DataFrame | None:
         """Serve the union branches from their cuboids, then re-run the
         outer aggregate verbatim over the served (tiny) union."""
-        base = self._execute_union_digest(ad.base, approx_distinct)
+        base = self._execute_union_digest(ad.base, approx_distinct, routes)
         if base is None:
             return None
         aggs = [F.expr(sql).alias(n) for n, sql in ad.select if sql is not None]
@@ -858,17 +852,6 @@ class OlapEngine:
         if ad.limit is not None:
             out = out.limit(ad.limit)
         return out
-
-    def _set_pool(self, pool: str) -> None:
-        """Scheduler pool by query weight (ResultPlan.scala:66-83 parity —
-        the reference picks vip/heavy/light pools from the query's expected
-        cost). Exact cuboid hits are the cheapest scans (vip), routed
-        re-aggregations light, full pushdown scans heavy. The local property
-        is thread-scoped, so concurrent query threads each tag their own
-        jobs; a no-op under FIFO scheduling, and with
-        ``spark.scheduler.mode=FAIR`` (+ a pool XML) it keeps dashboard
-        queries responsive while big pushdown scans run."""
-        self.spark.sparkContext.setLocalProperty("spark.scheduler.pool", pool)
 
     def _maybe_cache(
         self, key: tuple, df: DataFrame, skip: bool = False
@@ -973,6 +956,8 @@ class OlapEngine:
                 f"\nmulti-context: {len(self.last_routes)} islands -> "
                 f"{[(r.cube, r.cuboid.dims) for r in self.last_routes]}"
             )
+        if self.last_decision is not None and self.last_decision.reason:
+            head += f"\nreason: {self.last_decision.reason}"
         plan = df._jdf.queryExecution().executedPlan().toString()
         return head + "\n" + plan
 

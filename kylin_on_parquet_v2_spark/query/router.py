@@ -410,7 +410,7 @@ def _fold_dim_range_reject(digest: SqlDigest, inst: CubeInstance) -> list[str]:
     so a stale reject of that name would wrongly prune the whole merged
     range. ENFORCED by ``CubeInstance.lifecycle_epoch`` (round-9 advisor):
     every commit/uncommit/dim-range recompute bumps the epoch, the engine
-    stores it in the memo entry, and ``_replay_route`` discards entries
+    stores it in the memoized decision, and ``_serve`` re-plans decisions
     whose epoch mismatches — callers driving ``cube/merge.py`` directly no
     longer need to clear ``engine._route_memo`` by hand (refresh_cube still
     clears wholesale as defense in depth)."""

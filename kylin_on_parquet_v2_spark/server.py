@@ -13,8 +13,7 @@ under the lock (it reads/writes engine-global ``last_route`` state — the
 reference keeps OLAPContext thread-local instead). Spark job execution and
 result collection happen OUTSIDE the critical section, so a slow pushdown
 scan no longer blocks a fast routed dashboard query on another connection
-(Spark schedules jobs from concurrent threads independently; the scheduler
-pool tag is a thread-local property set before the lock is released).
+(Spark schedules jobs from concurrent threads independently).
 """
 
 from __future__ import annotations

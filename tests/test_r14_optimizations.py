@@ -8,6 +8,7 @@ hooks, and the zero-norm mask in the vectorized brute force.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from kylin_on_parquet_v2_spark.pipeline import dedup as D
@@ -339,6 +340,33 @@ def test_lloyd_array_agg_matches_columns(spark):
             new[r["ivf_list"]] = [float(r[f"c{i}"]) for i in range(64)]
         cents = new
     assert cents_new == cents
+
+
+@pytest.mark.parametrize("builder", ["hist_build", "hist_reagg", "lloyd"])
+def test_backtick_in_column_name_is_quoted(spark, builder):
+    """The single-parse SQL spellings of hist_build/hist_reagg and the
+    Lloyd mean aggregate double a backtick inside a column name before
+    wrapping the name in backticks (Spark's quoteIdentifier), so the
+    expression resolves the column instead of failing to parse."""
+    from kylin_on_parquet_v2_spark.cube import measures as M
+    from kylin_on_parquet_v2_spark.metadata.cube import FunctionDesc
+
+    func = FunctionDesc("PERCENTILE_APPROX", "v`x", "hist(4,0,4)")
+    if builder == "hist_build":
+        df = spark.createDataFrame([("a", 0.5), ("a", 3.5), ("b", 1.5)], ["g", "v`x"])
+        built = df.groupBy("g").agg(M.hist_build(func, "h")).orderBy("g")
+        assert [r["h"] for r in built.collect()] == [[1, 0, 0, 1], [0, 1, 0, 0]]
+    elif builder == "hist_reagg":
+        df = spark.createDataFrame([([1, 0, 0, 1],), ([0, 1, 0, 0],)], ["h`1"])
+        merged = df.groupBy().agg(M.hist_reagg(func, "h`1"))
+        assert merged.columns == ["h`1"]
+        assert merged.collect()[0][0] == [1, 1, 0, 1]
+    else:
+        rows = [(i, [float(i % 3), 1.0, float(i % 5), 0.5]) for i in range(12)]
+        df = spark.createDataFrame(rows, ["vec_id", "e`v"])
+        # vec_col is a column reference, so the name is spelled quoted
+        cents = S.train_ivf_centroids(df, n_lists=2, iters=1, vec_col="`e``v`", dim=4)
+        assert len(cents) == 2 and all(len(c) == 4 for c in cents)
 
 
 def test_probe_lists_py_edge_cases_match_expression(spark):

@@ -746,29 +746,6 @@ def test_group_expression_with_window_routes(engine):
     assert engine.last_route is not None
 
 
-def test_scheduler_pool_by_query_weight(engine):
-    """ResultPlan.scala:66-83 parity: the engine tags each query's jobs
-    with a scheduler pool matching its expected cost — exact cuboid hits
-    vip, routed re-aggregations light, pushdown scans heavy."""
-    sc = engine.spark.sparkContext
-    engine.sql(
-        """select l_returnflag, l_linestatus, sum(l_quantity) as s, count(*) as n
-           from lineitem group by l_returnflag, l_linestatus"""
-    )
-    assert engine.last_route is not None and engine.last_route.exact
-    assert sc.getLocalProperty("spark.scheduler.pool") == "vip"
-    # filter on a second dim forces re-aggregation from a wider cuboid
-    engine.sql(
-        """select l_returnflag, sum(l_quantity) as s from lineitem
-           where l_linestatus = 'F' group by l_returnflag"""
-    )
-    assert engine.last_route is not None and not engine.last_route.exact
-    assert sc.getLocalProperty("spark.scheduler.pool") == "light"
-    engine.sql("select l_returnflag, sum(l_tax) as s from lineitem group by l_returnflag")
-    assert engine.last_route is None
-    assert sc.getLocalProperty("spark.scheduler.pool") == "heavy"
-
-
 def test_storage_limit_pushdown_on_exact_hit(engine):
     """Storage limit pushdown (GTCubeStorageQueryBase.java:190-196
     StorageLimitLevel): an exact cuboid hit with LIMIT and no re-agg plans
