@@ -24,11 +24,13 @@ Scale notes:
 
 from __future__ import annotations
 
+import json
 import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from kylin_on_parquet_v2_spark import fs as FS
 from kylin_on_parquet_v2_spark.cube import dictionary as GD
@@ -157,6 +159,10 @@ def join_null_safe(
     return left.join(renamed, cond, how).drop(*[f"__r_{k}" for k in keys])
 
 
+def _schema(js: str) -> StructType:
+    return StructType.fromJson(json.loads(js))
+
+
 @dataclass
 class CubeInstance:
     """A built cube: descriptor + scheduler + on-disk layouts."""
@@ -182,6 +188,16 @@ class CubeInstance:
     #: lookup-table snapshot parquet paths, frozen at build time
     #: (reference TableScanPlan.createLookupTable / SparderLookupManager)
     snapshots: dict[str, str] = field(default_factory=dict)
+    #: the Spark schema each layout (cuboid_id), lookup snapshot (table)
+    #: and global dictionary (bitmap column) reads back with, recorded when
+    #: it is written and persisted in cube_meta.json. Serving reads pass it
+    #: to ``spark.read.schema(...)``: the schema comes from metadata, never
+    #: from a schema-inference Spark job per read (FilePruner.scala:106-113
+    #: builds the layout schema from cube metadata the same way). Partition
+    #: columns keep their read-back types (segment date, shard int).
+    layout_schemas: dict[int, StructType] = field(default_factory=dict)
+    snapshot_schemas: dict[str, StructType] = field(default_factory=dict)
+    dict_schemas: dict[str, StructType] = field(default_factory=dict)
     #: canonical resolved SQL -> computed-column name, for rewriting
     #: agg-over-expression calls onto computed-column measures
     #: (CreateFlatTable.scala:43-95 / OLAPAggregateRel.java:528-600)
@@ -210,9 +226,9 @@ class CubeInstance:
     #: router's fold re-coerces bounds and filter literals through this map
     #: before comparing (reference DataTypeOrder, SegmentPruner.java).
     dim_range_types: dict[str, str] = field(default_factory=dict)
-    #: (shard col, literal SQL, buckets) -> shard id; memoizes the one-row
-    #: Spark job that computes pmod(hash(literal)) with JVM hash semantics,
-    #: so repeated shard-pruned queries pay it once (not persisted)
+    #: (shard col, literal SQL, buckets) -> shard id; memoizes the
+    #: constant-folded pmod(hash(literal)) that takes JVM hash semantics,
+    #: so repeated shard-pruned queries pay its analysis once (not persisted)
     shard_probe_cache: dict = field(default_factory=dict, repr=False)
     #: (lookup table, filter conjunct SQL) -> list of host-FK literals (or
     #: None = not translatable); memoizes the snapshot probe behind the
@@ -255,14 +271,19 @@ class CubeInstance:
     def _layout_df_raw(self, spark: SparkSession, cuboid: Cuboid) -> DataFrame:
         """Layout scan WITHOUT the READY-visibility prune — build/merge
         internals that manage segment dirs themselves."""
-        t = self.layout_tables.get(cuboid.cuboid_id)
-        return spark.table(t) if t else spark.read.parquet(self.layouts[cuboid.cuboid_id])
+        cid = cuboid.cuboid_id
+        t = self.layout_tables.get(cid)
+        if t:
+            return spark.table(t)
+        return spark.read.schema(self.layout_schemas[cid]).parquet(self.layouts[cid])
 
     def lookup_df(self, spark: SparkSession, table: str) -> DataFrame:
         """Lookup rows as of build time (snapshot), falling back to the live
         view if no snapshot exists (pre-snapshot cubes)."""
         path = self.snapshots.get(table)
-        return spark.read.parquet(path) if path else spark.table(table)
+        if not path:
+            return spark.table(table)
+        return spark.read.schema(self.snapshot_schemas[table]).parquet(path)
 
     def dict_df(self, spark: SparkSession, param: str) -> DataFrame:
         """The persisted global dictionary for a bitmap measure column
@@ -274,9 +295,12 @@ class CubeInstance:
         dictionary forward instead of failing on a missing dir."""
         from kylin_on_parquet_v2_spark.cube import dictionary as GD
 
-        path = os.path.join(self.storage_dir, self.desc.name, "dict", param)
+        path = self.dict_path(param)
         GD.repair_dict_swap(FS.fs_for(path, spark), path)
-        return spark.read.parquet(path)
+        return spark.read.schema(self.dict_schemas[param]).parquet(path)
+
+    def dict_path(self, param: str) -> str:
+        return os.path.join(self.storage_dir, self.desc.name, "dict", param)
 
     def meta_path(self) -> str:
         return os.path.join(self.storage_dir, self.desc.name, "cube_meta.json")
@@ -292,6 +316,10 @@ class CubeInstance:
             "layout_tables": {str(k): v for k, v in self.layout_tables.items()},
             "layout_rows": {str(k): v for k, v in self.layout_rows.items()},
             "snapshots": self.snapshots,
+            # compact JSON strings: the meta's indentation would triple them
+            "layout_schemas": {str(k): v.json() for k, v in self.layout_schemas.items()},
+            "snapshot_schemas": {k: v.json() for k, v in self.snapshot_schemas.items()},
+            "dict_schemas": {k: v.json() for k, v in self.dict_schemas.items()},
             "computed_columns": self.computed_canon,
             "segment_ranges": self.segment_ranges,
             "dim_ranges": self.dim_ranges,
@@ -346,6 +374,15 @@ class CubeInstance:
             inst.layout_tables[cid] = v
         inst.layout_rows = {int(k): v for k, v in meta.get("layout_rows", {}).items()}
         inst.snapshots = dict(meta.get("snapshots", {}))
+        inst.layout_schemas = {
+            int(k): _schema(v) for k, v in meta.get("layout_schemas", {}).items()
+        }
+        inst.snapshot_schemas = {
+            k: _schema(v) for k, v in meta.get("snapshot_schemas", {}).items()
+        }
+        inst.dict_schemas = {
+            k: _schema(v) for k, v in meta.get("dict_schemas", {}).items()
+        }
         inst.computed_canon = dict(meta.get("computed_columns", {}))
         inst.segment_ranges = dict(meta.get("segment_ranges", {}))
         inst.dim_ranges = {
@@ -356,7 +393,40 @@ class CubeInstance:
         known = set(inst.scheduler.cuboids)
         if not inst.layouts or not set(inst.layouts) <= known:
             return None  # lattice mismatch (aggregation groups changed)
+        inst._backfill_schemas(spark or SparkSession.active())
         return inst
+
+    def _backfill_schemas(self, spark: SparkSession) -> None:
+        """Record the read-back schema of every layout, snapshot and
+        dictionary the meta names without one (a cube_meta.json written
+        before schemas were recorded): one inference per path, once, then
+        the meta is saved — serving reads never infer."""
+        missing = [
+            (self.layout_schemas, cid, path)
+            for cid, path in self.layouts.items()
+            if cid not in self.layout_schemas
+        ] + [
+            (self.snapshot_schemas, table, path)
+            for table, path in self.snapshots.items()
+            if table not in self.snapshot_schemas
+        ]
+        for m in self.desc.measures:
+            param = m.function.parameter
+            if (
+                m.function.expression == "COUNT_DISTINCT"
+                and m.function.returntype == "bitmap"
+                and param not in self.dict_schemas
+            ):
+                path = self.dict_path(param)
+                fs = FS.fs_for(path, spark)
+                GD.repair_dict_swap(fs, path)
+                if fs.exists(path):
+                    missing.append((self.dict_schemas, param, path))
+        if not missing:
+            return
+        for schemas, key, path in missing:
+            schemas[key] = spark.read.parquet(path).schema
+        self.save_meta()
 
     def segments(self, spark: SparkSession) -> list[str]:
         """Current segment values, from the base layout's partition dirs
@@ -695,7 +765,9 @@ class CubeBuilder:
             else:
                 d = GD.build_global_dict(flat, param)
                 d.write.mode("overwrite").parquet(dict_path)
-            flat = GD.encode_column(flat, self.spark.read.parquet(dict_path), param)
+            written = self.spark.read.parquet(dict_path)
+            inst.dict_schemas[param] = written.schema
+            flat = GD.encode_column(flat, written, param)
         flat.persist()
         self._measure_key_nullability(flat, inst.segmented)
         self._prepare_measure_bases(flat)
@@ -712,6 +784,7 @@ class CubeBuilder:
             snap_path = os.path.join(snap_root, lk.name)
             self.spark.table(lk.table).coalesce(1).write.mode("overwrite").parquet(snap_path)
             inst.snapshots[lk.table] = snap_path
+            inst.snapshot_schemas[lk.table] = self.spark.read.parquet(snap_path).schema
         # commit point: markers flip every built segment to READY, then the
         # meta write publishes the instance — a crash anywhere above leaves
         # nothing visible to serving scans
@@ -786,6 +859,7 @@ class CubeBuilder:
                     # written layout truncates lineage (the reference builds
                     # children from persisted parents too)
                     built[cuboid_id] = self.spark.read.parquet(path)
+                    inst.layout_schemas[cuboid_id] = built[cuboid_id].schema
 
     def _adopt_layout(self, path: str, cuboid: Cuboid) -> tuple[bool, str | None]:
         """Resume check for one layout: ``(True, tname|None)`` when the
@@ -1038,16 +1112,16 @@ class CubeBuilder:
         return True
 
     def _agg_from_parent(self, parent: DataFrame, cuboid: Cuboid, segmented: bool) -> DataFrame:
-        # The re-agg Column list depends only on which measure columns the
-        # parent carries (same cube => same measure types), not on the
-        # cuboid — memoize it per parent shape (r14, guide §5: Column
+        # The re-agg Column list depends only on the parent's columns and
+        # their types (SUM re-casts to the stored decimal type), not on the
+        # cuboid — memoize it per parent schema (r14, guide §5: Column
         # objects are immutable expression wrappers, safely reused across
         # every child cuboid's groupBy; rebuilding them was pure per-layout
         # py4j driver work in the lattice loop).
         memo = getattr(self, "_reagg_memo", None)
         if memo is None:
             memo = self._reagg_memo = {}
-        pkey = tuple(parent.columns)
+        pkey = tuple((f.name, f.dataType) for f in parent.schema.fields)
         aggs = memo.get(pkey)
         if aggs is None:
             aggs = []
@@ -1302,9 +1376,9 @@ class CubeBuilder:
             )
             extended.write.mode("overwrite").parquet(dict_path + "_staging")
             GD.publish_dict_staging(layout_fs, dict_path)
-            flat_seg = GD.encode_column(
-                flat_seg, self.spark.read.parquet(dict_path), param
-            )
+            written = self.spark.read.parquet(dict_path)
+            inst.dict_schemas[param] = written.schema
+            flat_seg = GD.encode_column(flat_seg, written, param)
         flat_seg.persist()
         self._measure_key_nullability(flat_seg, True)
         self._prepare_measure_bases(flat_seg)
@@ -1328,6 +1402,9 @@ class CubeBuilder:
                     table_suffix="_rstg",
                 )
                 built[cuboid.cuboid_id] = self.spark.read.parquet(staging)
+                # the staged dir holds the same columns and partition
+                # columns as the layout it replaces a segment of
+                inst.layout_schemas[cuboid.cuboid_id] = built[cuboid.cuboid_id].schema
         finally:
             self._release_measure_bases()
             flat_seg.unpersist()
@@ -1426,9 +1503,9 @@ class CubeBuilder:
             # source is safe; the swap keeps readers of the old dict valid
             extended.write.mode("overwrite").parquet(dict_path + "_staging")
             GD.publish_dict_staging(layout_fs, dict_path)
-            flat_new = GD.encode_column(
-                flat_new, self.spark.read.parquet(dict_path), param
-            )
+            written = self.spark.read.parquet(dict_path)
+            inst.dict_schemas[param] = written.schema
+            flat_new = GD.encode_column(flat_new, written, param)
         flat_new.persist()
         self._measure_key_nullability(flat_new, True)
         self._prepare_measure_bases(flat_new)
@@ -1494,6 +1571,8 @@ class CubeBuilder:
                         inst.layout_rows[cuboid_id] = n
                     else:
                         inst.layout_rows.pop(cuboid_id, None)
-                    built[cuboid_id] = self.spark.read.parquet(path).filter(
+                    written = self.spark.read.parquet(path)
+                    inst.layout_schemas[cuboid_id] = written.schema
+                    built[cuboid_id] = written.filter(
                         F.col(SEGMENT_COL).isin(segments)
                     )

@@ -113,7 +113,11 @@ def merge_segments(
             # recomputing from the (now absent) absorbed dirs would overwrite
             # the merged segment with an empty one
             continue
-        df = spark.read.parquet(path).filter(F.col(SEGMENT_COL).isin(segments))
+        # the merge re-aggregates with the same rules as a child layout
+        # build, so the merged segment keeps this read-back schema
+        on_disk = spark.read.parquet(path)
+        inst.layout_schemas[cuboid_id] = on_disk.schema
+        df = on_disk.filter(F.col(SEGMENT_COL).isin(segments))
         aggs = []
         for m in inst.desc.measures:
             if m.name not in df.columns:

@@ -538,6 +538,11 @@ def _probe_lists_py(qvec, cents: list[list[float]], n_probe: int) -> list[int]:
     return [i for _, i in ordered[:n_probe]]
 
 
+#: the most query vectors one IVF probe ranking collects to the driver; the
+#: query set is small by contract, so a larger one is rejected, not collected
+IVF_MAX_QUERIES = 10_000
+
+
 def _probes_df(
     queries: DataFrame,
     cents: list[list[float]],
@@ -548,7 +553,9 @@ def _probes_df(
     """(query_id, qvec, ivf_list, __nq) probe rows plus the sorted distinct
     probed list ids, computed DRIVER-SIDE from one collect of the
     (small-by-contract) query set — the same driver-collected-queries
-    shape as :func:`brute_force_topk_vectorized`.
+    shape as :func:`brute_force_topk_vectorized`. More than
+    :data:`IVF_MAX_QUERIES` queries raise a ``ValueError``; the collect is
+    bounded at one row past the limit.
 
     Replaces the executor-side probe ranking whose k*dim centroid-literal
     expression previously rode through Catalyst analysis + codegen in
@@ -561,7 +568,12 @@ def _probes_df(
     from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
     src = queries.select(F.col(id_col), F.col(vec_col))
-    rows = src.collect()
+    rows = src.limit(IVF_MAX_QUERIES + 1).collect()
+    if len(rows) > IVF_MAX_QUERIES:
+        raise ValueError(
+            f"IVF query set exceeds IVF_MAX_QUERIES={IVF_MAX_QUERIES} rows; "
+            "probe ranking collects the queries to the driver"
+        )
     schema = StructType(
         [
             StructField("query_id", src.schema[id_col].dataType, True),
@@ -679,6 +691,28 @@ class IVFIndex:
         self.id_col, self.vec_col = id_col, vec_col
         self.data_path = os.path.join(store_dir, "lists")
         self.quantizer_path = os.path.join(store_dir, "quantizer.json")
+        self.schema_path = os.path.join(store_dir, "lists_schema.json")
+
+    def _record_schema(self) -> None:
+        """Persist the list store's read-back schema (``ivf_list`` keeps its
+        inferred partition type) after every write, so reads skip the
+        schema-inference Spark job."""
+        from kylin_on_parquet_v2_spark import fs as FS
+
+        schema = self.spark.read.parquet(self.data_path).schema
+        FS.write_json(self.schema_path, schema.jsonValue(), self.spark)
+
+    def _lists(self) -> DataFrame:
+        """The list store, read with its recorded schema. A store written
+        before schemas were recorded gets one recorded now."""
+        from pyspark.sql.types import StructType
+
+        from kylin_on_parquet_v2_spark import fs as FS
+
+        if not FS.fs_for(self.schema_path, self.spark).exists(self.schema_path):
+            self._record_schema()
+        schema = StructType.fromJson(FS.read_json(self.schema_path, self.spark))
+        return self.spark.read.schema(schema).parquet(self.data_path)
 
     def build(
         self,
@@ -711,6 +745,7 @@ class IVFIndex:
             self.dim, centroids=cents,
         )
         assigned.write.mode("overwrite").partitionBy("ivf_list").parquet(self.data_path)
+        self._record_schema()
 
     def add(self, delta: DataFrame) -> None:
         """Assign ONLY the delta through the frozen quantizer and append its
@@ -723,6 +758,7 @@ class IVFIndex:
             self.dim, centroids=cents,
         )
         assigned.write.mode("append").partitionBy("ivf_list").parquet(self.data_path)
+        self._record_schema()
 
     # -- restatement (r12 judge missing #3): late-data maintenance for the
     # -- ANN store, mirroring rebuild_segment's staged-swap discipline — a
@@ -847,7 +883,7 @@ class IVFIndex:
             rids = rids.unionByName(p)
         rids = rids.dropDuplicates()
         cents = load_ivf_quantizer(self.quantizer_path, self.spark)
-        store = self.spark.read.parquet(self.data_path)
+        store = self._lists()
         new_assign = None
         touched = store.join(
             rids, store[idc] == rids["__rid"], "left_semi"
@@ -884,12 +920,13 @@ class IVFIndex:
         fs.write_text(sentinel, json.dumps({"affected": affected}))
         self._swap_staged(fs, staging)
         fs.remove(sentinel)
+        self._record_schema()
 
     def topk(self, queries: DataFrame, k: int = 5, n_probe: int = 4) -> DataFrame:
         """Exact cosine top-k over the probed inverted lists only."""
         self.repair_restate()  # query-path repair, dict_df parity
         cents = load_ivf_quantizer(self.quantizer_path, self.spark)
-        lists = self.spark.read.parquet(self.data_path).select(
+        lists = self._lists().select(
             F.col(self.id_col).alias("cand_id"),
             F.col(self.vec_col).alias("cvec"),
             "ivf_list",

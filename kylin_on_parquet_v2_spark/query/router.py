@@ -1201,15 +1201,16 @@ def routed_layout_scan(
         df = df.drop(SEGMENT_COL)
     if route.shard_eq is not None and SHARD_COL in df.columns:
         # shard-dir pruning: compute the literal's shard id with the SAME
-        # hash/type the write used (a one-row local job — Spark's Murmur3
-        # must not be reimplemented driver-side), memoized per literal so
-        # repeated dashboard queries pay it once
+        # hash/type the write used (Spark's Murmur3 must not be
+        # reimplemented driver-side). Over a one-row inline table the
+        # optimizer folds the expression to a local relation, so no Spark
+        # job runs; memoized per literal all the same
         col_name, lit_sql = route.shard_eq
         ck = (col_name, lit_sql, inst.desc.shard_buckets)
         k = inst.shard_probe_cache.get(ck)
         if k is None:
             k = (
-                spark.range(1)
+                spark.sql("VALUES (0)")
                 .select(
                     F.pmod(
                         F.hash(F.expr(lit_sql).cast(df.schema[col_name].dataType)),

@@ -316,9 +316,8 @@ def fold_tail_dictionary(
     added: dict[str, int] = {}
     fs = FS.fs_for(inst.storage_dir, spark)
     for param in bitmap_params:
-        dict_path = os.path.join(inst.storage_dir, inst.desc.name, "dict", param)
-        GD.repair_dict_swap(fs, dict_path)
-        base = spark.read.parquet(dict_path)
+        dict_path = inst.dict_path(param)
+        base = inst.dict_df(spark, param)
         ext = GD.extend_global_dict(base, rt, param)
         if ext is base:  # nothing new in the tail
             added[param] = 0
@@ -329,7 +328,11 @@ def fold_tail_dictionary(
         ext.write.mode("overwrite").parquet(dict_path + "_staging")
         n_before = base.count()
         GD.publish_dict_staging(fs, dict_path)
-        added[param] = spark.read.parquet(dict_path).count() - n_before
+        written = spark.read.parquet(dict_path)
+        inst.dict_schemas[param] = written.schema
+        added[param] = written.count() - n_before
+    if any(added.values()):
+        inst.save_meta()
     FS.write_json(_cover_path(inst), {"files": files}, spark)
     return added
 

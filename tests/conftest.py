@@ -60,10 +60,14 @@ def clone_cube_store(
 ) -> str:
     """Byte-copy a built cube store so a mutation test gets a private,
     identical instance without paying the build. The persisted meta holds
-    ABSOLUTE layout/snapshot paths — rewrite the template prefix in every
-    cube_meta.json so the clone serves its own files. ``rename=(old, new)``
-    additionally renames the cube (dir + meta name) so a test can attach a
-    `dataclasses.replace(..., name=...)` variant of the template's desc."""
+    ABSOLUTE layout/snapshot paths — every cube_meta.json is parsed and its
+    path fields re-rooted under ``dst_dir``, so the clone serves its own
+    files; no other field is touched (recorded schemas name columns, and a
+    column may contain the cube name). ``rename=(old, new)`` additionally
+    renames the cube (dir, path fields and the meta's ``cube`` name) so a
+    test can attach a `dataclasses.replace(..., name=...)` variant of the
+    template's desc."""
+    import json
     import os
     import shutil
 
@@ -71,17 +75,27 @@ def clone_cube_store(
     if rename is not None:
         old, new = rename
         os.rename(os.path.join(dst_dir, old), os.path.join(dst_dir, new))
+
+    def moved(path: str) -> str:
+        if not path.startswith(template_dir + os.sep):
+            return path  # another template's clone in the same dst_dir
+        rel = os.path.relpath(path, template_dir)
+        if rename is not None and rel.split(os.sep)[0] == rename[0]:
+            rel = os.path.join(rename[1], *rel.split(os.sep)[1:])
+        return os.path.join(dst_dir, rel)
+
     for root, _dirs, files in os.walk(dst_dir):
         for f in files:
             if f == "cube_meta.json":
                 p = os.path.join(root, f)
                 with open(p) as fh:
-                    txt = fh.read()
-                txt = txt.replace(template_dir, dst_dir)
-                if rename is not None:
-                    txt = txt.replace(rename[0], rename[1])
+                    meta = json.load(fh)
+                for key in ("layouts", "snapshots"):
+                    meta[key] = {k: moved(v) for k, v in meta.get(key, {}).items()}
+                if rename is not None and meta.get("cube") == rename[0]:
+                    meta["cube"] = rename[1]
                 with open(p, "w") as fh:
-                    fh.write(txt)
+                    json.dump(meta, fh, indent=2)
     return dst_dir
 
 

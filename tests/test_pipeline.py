@@ -461,6 +461,36 @@ def test_ivf_index_build_query_add(spark, tmp_path):
     ), plan
 
 
+def test_ivf_index_reads_lists_with_recorded_schema(spark, tmp_path):
+    """build/add record the list store's read-back schema; the query-side
+    read takes it and launches no schema-inference Spark job."""
+    emb = spark.table("embeddings").filter(F.col("vec_id") < 60)
+    idx = S.IVFIndex(spark, str(tmp_path / "ivf"))
+    idx.build(emb.filter(F.col("vec_id") < 40), train_iters=0)
+    idx.add(emb.filter(F.col("vec_id") >= 40))
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    j0 = dag.numTotalJobs()
+    lists = idx._lists()
+    assert dag.numTotalJobs() == j0
+    assert lists.schema == spark.read.parquet(idx.data_path).schema
+    assert lists.count() == 60
+
+
+def test_ivf_query_set_bounded(spark, tmp_path, monkeypatch):
+    """The driver-side probe ranking collects at most IVF_MAX_QUERIES + 1
+    query rows and rejects a larger query set with a reason naming the
+    limit, instead of collecting it."""
+    emb = spark.table("embeddings").filter(F.col("vec_id") < 40)
+    idx = S.IVFIndex(spark, str(tmp_path / "ivf"))
+    idx.build(emb, train_iters=0)
+    monkeypatch.setattr(S, "IVF_MAX_QUERIES", 3)
+    assert idx.topk(emb.filter(F.col("vec_id") < 3), k=2).count() > 0
+    with pytest.raises(ValueError, match="IVF_MAX_QUERIES=3"):
+        idx.topk(emb.filter(F.col("vec_id") < 4), k=2)
+    with pytest.raises(ValueError, match="IVF_MAX_QUERIES=3"):
+        S.ann_ivf_topk(emb, emb.filter(F.col("vec_id") < 4), k=2)
+
+
 def _dir_bytes(root):
     """{relative file path: bytes} for every data file under a list dir."""
     import os
