@@ -101,7 +101,9 @@ def brute_force_topk_vectorized(
     sane truth set) — r13 advisor.
 
     Scale shape: the query set is driver-collected (small by definition —
-    the same metadata-sized object as a quantizer), the corpus is scanned
+    the same metadata-sized object as a quantizer; more than
+    :data:`IVF_MAX_QUERIES` queries raise a ``ValueError``, and the collect
+    is bounded at one row past the limit), the corpus is scanned
     once map-side, each partition emits only its k best per query, and the
     global top-k reduces |partitions|·|queries|·k rows — the corpus itself
     is never shuffled (brute_force_topk's window shuffles every scored
@@ -115,7 +117,9 @@ def brute_force_topk_vectorized(
         StructType,
     )
 
-    q_rows = queries.select(F.col(id_col), F.col(vec_col)).collect()
+    q_rows = _collect_queries(
+        queries.select(F.col(id_col), F.col(vec_col)), "vectorized top-k"
+    )
     if not q_rows:
         return brute_force_topk(corpus, queries, k, id_col, vec_col)
     q_ids = np.array([r[0] for r in q_rows])
@@ -538,9 +542,23 @@ def _probe_lists_py(qvec, cents: list[list[float]], n_probe: int) -> list[int]:
     return [i for _, i in ordered[:n_probe]]
 
 
-#: the most query vectors one IVF probe ranking collects to the driver; the
-#: query set is small by contract, so a larger one is rejected, not collected
+#: the most query vectors one IVF probe ranking or vectorized brute-force
+#: top-k collects to the driver; the query set is small by contract, so a
+#: larger one is rejected, not collected
 IVF_MAX_QUERIES = 10_000
+
+
+def _collect_queries(src: DataFrame, what: str) -> list:
+    """Collect a query set of at most :data:`IVF_MAX_QUERIES` rows, reading
+    one row past the limit; a larger set raises a ``ValueError`` naming
+    the limit."""
+    rows = src.limit(IVF_MAX_QUERIES + 1).collect()
+    if len(rows) > IVF_MAX_QUERIES:
+        raise ValueError(
+            f"query set exceeds IVF_MAX_QUERIES={IVF_MAX_QUERIES} rows; "
+            f"{what} collects the queries to the driver"
+        )
+    return rows
 
 
 def _probes_df(
@@ -568,12 +586,7 @@ def _probes_df(
     from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
     src = queries.select(F.col(id_col), F.col(vec_col))
-    rows = src.limit(IVF_MAX_QUERIES + 1).collect()
-    if len(rows) > IVF_MAX_QUERIES:
-        raise ValueError(
-            f"IVF query set exceeds IVF_MAX_QUERIES={IVF_MAX_QUERIES} rows; "
-            "probe ranking collects the queries to the driver"
-        )
+    rows = _collect_queries(src, "IVF probe ranking")
     schema = StructType(
         [
             StructField("query_id", src.schema[id_col].dataType, True),

@@ -86,7 +86,6 @@ class OlapEngine:
         storage_dir: str | None = None,
         transformers: list | None = None,
         max_result_rows: int | None = None,
-        result_cache_size: int = 0,
         query_timeout_sec: float | None = None,
         slow_query_sec: float | None = None,
         low_memory_alert_mb: int | None = None,
@@ -121,21 +120,10 @@ class OlapEngine:
             if transformers is not None
             else default_transformers(max_result_rows)
         )
-        #: opt-in LRU result cache (QueryService.queryAndUpdateCache parity):
-        #: keyed by massaged SQL + routing flags, invalidated on cube build.
-        #: Caching MATERIALIZES the result (the reference caches collected
-        #: result sets too), so it suits repeated dashboard-style queries.
-        self.result_cache_size = result_cache_size
-        self.max_result_rows = max_result_rows
-        self._cache: "OrderedDict[tuple, tuple]" = OrderedDict()
+        #: bumped on every build/load/refresh/hybrid change; part of the
+        #: route-memo key, so no decision outlives the cubes it was made on
         self._cache_epoch = 0
-        #: when True, sql() never collects for the cache itself — it parks
-        #: the fill on _pending_cache for complete_cache_fill to run later
-        #: (the query server enables this so no Spark collection happens
-        #: inside its routing critical section; round-5 advisor finding #4)
-        self.defer_cache_fill = False
-        self._pending_cache: tuple | None = None
-        self._cache_lock = threading.Lock()
+        self._memo_lock = threading.Lock()
         #: memoized routing DECISIONS (not results): massaged-SQL+flags+epoch
         #: -> what the planner decided last time. Real deployments register
         #: hundreds of cubes and dashboards repeat queries, so re-scoring
@@ -170,11 +158,6 @@ class OlapEngine:
             slow_threshold_sec=slow_query_sec,
             low_memory_alert_mb=low_memory_alert_mb,
         )
-
-    #: hard cap on rows a cached result may materialize on the driver when
-    #: no explicit max_result_rows is configured — caching is opt-in but
-    #: must never pin an unbounded result set in driver memory
-    DEFAULT_CACHE_ROW_CAP = 100_000
 
     #: routing-decision memo entries kept (LRU); decisions are tiny (a
     #: digest + a Route), the bound only guards pathological SQL churn
@@ -237,10 +220,9 @@ class OlapEngine:
             segment_range=segment_range
         )
         self.cubes[desc.name] = inst
-        # new data => every cached result is stale (the reference clears its
-        # query cache on segment/cube state changes the same way)
+        # new data => every memoized decision is stale (the reference clears
+        # its query cache on segment/cube state changes the same way)
         self._cache_epoch += 1
-        self._cache.clear()
         self._route_memo.clear()
         return inst
 
@@ -260,7 +242,6 @@ class OlapEngine:
             )
         self.cubes[desc.name] = inst
         self._cache_epoch += 1
-        self._cache.clear()
         self._route_memo.clear()
         return inst
 
@@ -278,7 +259,6 @@ class OlapEngine:
         )
         if built:
             self._cache_epoch += 1
-            self._cache.clear()
             self._route_memo.clear()
             maybe_auto_merge(self.spark, inst)
             # retention after merge (reference order: new segment READY ->
@@ -289,7 +269,6 @@ class OlapEngine:
             # and the merge could memoize a segment_reject computed from
             # PRE-merge ranges — the merged dir reuses an absorbed segment's
             # name, so replaying that reject would drop its widened rows
-            self._cache.clear()
             self._route_memo.clear()
         # hybrid maintenance: fold the realtime tail's values into the
         # persisted global dictionaries so subsequent hybrid
@@ -315,7 +294,6 @@ class OlapEngine:
             inst, segment
         )
         self._cache_epoch += 1
-        self._cache.clear()
         self._route_memo.clear()
 
     def register_hybrid(
@@ -349,7 +327,6 @@ class OlapEngine:
             )
         self.hybrids[cube_name] = part
         self._cache_epoch += 1
-        self._cache.clear()
         self._route_memo.clear()
 
     def compact_realtime(
@@ -484,7 +461,6 @@ class OlapEngine:
         approx_distinct: bool = False,
         approx_topn: bool = False,
         params: list | dict | None = None,
-        skip_result_cache: bool = False,
     ) -> DataFrame:
         """Answer ``query``; serve from a cuboid when provably equivalent.
 
@@ -496,13 +472,6 @@ class OlapEngine:
         (date range / whole history) be served by MERGING per-segment stored
         TopN lists — approximate with a declared bound (the reference's
         TopNMeasureType sum-merge capability); exact refusal is the default.
-
-        ``skip_result_cache=True`` bypasses the LRU result cache in BOTH
-        directions (no lookup, no fill) for this call: EXPLAIN surfaces use
-        it so the returned DataFrame always carries the statement's real
-        physical plan — a cache hit would be a LocalTableScan of collected
-        rows, which is the execution of the CACHE, not of the query
-        (round-7 advisor finding #2).
 
         ``params`` binds prepared-statement parameters (the reference's
         PreparedState path, corpus sql_dynamic/): a list for positional
@@ -516,35 +485,20 @@ class OlapEngine:
         pkey = tuple(params) if isinstance(params, list) else (
             tuple(sorted(params.items())) if isinstance(params, dict) else None
         )
-        cache_key = (
+        memo_key = (
             query, pkey, use_cube, approx_distinct, approx_topn, self._cache_epoch
         )
-        # A pending deferred fill from a PREVIOUS call must never survive
-        # into this one: embedded use alongside the server could otherwise
-        # leave a stale pending that a later un-cacheable server request
-        # pops and serves as ITS response (round-6 advisor finding #3).
-        self._pending_cache = None
-        if self.result_cache_size and not validate and not skip_result_cache:
-            with self._cache_lock:
-                hit = self._cache.pop(cache_key, None)
-                if hit is not None:
-                    self._cache[cache_key] = hit  # LRU touch
-            if hit is not None:
-                schema, rows, route, routes = hit
-                self.last_route = route
-                self.last_routes = list(routes)
-                return self.spark.createDataFrame(rows, schema)
-        with self._cache_lock:
-            memo = self._route_memo.get(cache_key) if not validate else None
+        with self._memo_lock:
+            memo = self._route_memo.get(memo_key) if not validate else None
         if memo is not None and memo.kind in ("routed", "multi"):
             # replay without re-analyzing the SQL or re-scoring every cube
             decision, out = self._serve(memo, approx_distinct)
             if out is not None:
-                self._record(decision, cache_key, replayed=True)
-                return self._maybe_cache(cache_key, out, skip_result_cache)
+                self._record(decision, memo_key, replayed=True)
+                return out
             # the cubes changed under the decision: drop it and plan again
-            with self._cache_lock:
-                self._route_memo.pop(cache_key, None)
+            with self._memo_lock:
+                self._route_memo.pop(memo_key, None)
             memo = None
         df = self.spark.sql(query, args=params) if params is not None else self.spark.sql(query)
         if not use_cube or not self.cubes:
@@ -556,12 +510,12 @@ class OlapEngine:
             decision, out = memo, None
         else:
             decision, out = self._decide(df, approx_distinct, approx_topn)
-        self._record(decision, cache_key, replayed=memo is not None)
+        self._record(decision, memo_key, replayed=memo is not None)
         if out is None:
-            return self._maybe_cache(cache_key, df, skip_result_cache)
+            return df
         if validate:
             self._assert_same(out, df)
-        return self._maybe_cache(cache_key, out, skip_result_cache)
+        return out
 
     # -- routing decision: decide, serve, record -----------------------------
 
@@ -642,10 +596,10 @@ class OlapEngine:
         if replayed:
             self.metrics["route_memo_hits"] += 1
         else:
-            # dict mutations share _cache_lock (routing itself is serialized
+            # memo mutations take _memo_lock (routing itself is serialized
             # by callers — the server holds its own lock — this only keeps
             # the OrderedDict structurally sound under embedded concurrent use)
-            with self._cache_lock:
+            with self._memo_lock:
                 self._route_memo[key] = d
                 self._route_memo.move_to_end(key)
                 while len(self._route_memo) > self.ROUTE_MEMO_SIZE:
@@ -853,85 +807,9 @@ class OlapEngine:
             out = out.limit(ad.limit)
         return out
 
-    def _maybe_cache(
-        self, key: tuple, df: DataFrame, skip: bool = False
-    ) -> DataFrame:
-        """Fill the LRU result cache (materializes the result — the
-        reference also caches collected result sets, QueryService:463-560).
-
-        Collection is capped: a result bigger than max_result_rows (or the
-        default cap) is returned un-cached instead of being materialized on
-        the driver — the cache is a dashboard-query accelerator, not a spill
-        risk.
-
-        With ``defer_cache_fill`` set (the query server turns it on), the
-        collect does NOT happen here: the fill is parked on
-        ``_pending_cache`` and completed by ``complete_cache_fill`` — so a
-        caller holding a routing lock never materializes inside it."""
-        if not self.result_cache_size or skip:
-            return df
-        routes = list(self.last_routes) + (
-            [self.last_route] if self.last_route is not None else []
-        )
-        if any(r is not None and r.hybrid_tail for r in routes):
-            # hybrid answers depend on the realtime store, which grows
-            # OUTSIDE the engine's cache epoch (stream appends) — caching
-            # would serve stale tails; the boundary/tail are recomputed per
-            # query instead. Checked across ALL contexts: a multi-island
-            # join/union with a hybrid island at position >0 must not be
-            # cached either (round-5 advisor finding #1).
-            return df
-        if self.defer_cache_fill:
-            self._pending_cache = (key, df, self.last_route, list(self.last_routes))
-            return df
-        rows = self._fill_cache(key, df, self.last_route, list(self.last_routes))
-        if rows is None:
-            return df
-        return self.spark.createDataFrame(rows, df.schema)
-
-    def _fill_cache(self, key, df, route, routes):
-        """Collect (capped) and store; returns the rows, or None if the
-        result exceeded the cap and was left uncached. Dict mutation is
-        guarded by ``_cache_lock`` so a deferred fill can run outside any
-        caller-held routing lock."""
-        cap = self.max_result_rows or self.DEFAULT_CACHE_ROW_CAP
-        rows = df.limit(cap + 1).collect()
-        if len(rows) > cap:
-            return None
-        with self._cache_lock:
-            self._cache[key] = (df.schema, rows, route, routes)
-            while len(self._cache) > self.result_cache_size:
-                self._cache.popitem(last=False)
-        return rows
-
-    def take_pending_cache(self, expect_df: DataFrame | None = None) -> tuple | None:
-        """Pop the deferred cache fill parked by the last ``sql`` call
-        (``defer_cache_fill`` mode). Call under the same lock as ``sql``.
-
-        ``expect_df`` guards against serving a STALE pending as another
-        query's answer (round-6 advisor finding #3): the caller passes the
-        DataFrame its own ``sql`` call returned, and a pending parked for a
-        different DataFrame is discarded instead of popped. ``sql`` also
-        clears the slot on entry, so this is a second belt."""
-        p, self._pending_cache = self._pending_cache, None
-        if p is not None and expect_df is not None and p[1] is not expect_df:
-            return None
-        return p
-
-    def complete_cache_fill(self, pending: tuple) -> list | None:
-        """Run a deferred cache fill (outside any routing lock): collects
-        the capped result, stores it, and returns the FULL row list so the
-        caller can serve its response from it without a second collection —
-        or None when the result was too big to cache (caller collects its
-        own limited view)."""
-        key, df, route, routes = pending
-        return self._fill_cache(key, df, route, routes)
-
     def explain(self, query: str, approx_distinct: bool = False) -> str:
-        """Human-readable routing decision + physical plan for ``query``.
-        Bypasses the result cache so the plan is always the statement's
-        real execution strategy, never a LocalTableScan of cached rows."""
-        df = self.sql(query, approx_distinct=approx_distinct, skip_result_cache=True)
+        """Human-readable routing decision + physical plan for ``query``."""
+        df = self.sql(query, approx_distinct=approx_distinct)
         route = self.last_route
         head = (
             f"route: cube={route.cube} cuboid={route.cuboid.dims} "

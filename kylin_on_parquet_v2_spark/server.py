@@ -168,26 +168,18 @@ class _Handler(BaseHTTPRequestHandler):
         shows the realization for a statement without running it): routes
         the SQL exactly like /api/query, returns the chosen realization
         per context plus the formatted Spark physical plan — never
-        collects, never fills the result cache."""
+        collects."""
         try:
             with self.lock:
-                # skip_result_cache: a cache HIT would hand back
-                # spark.createDataFrame(cached rows) and the 'plan' field
-                # would show a LocalTableScan of the cache instead of the
-                # statement's real physical plan (round-7 advisor #2)
                 df = self.engine.sql(
                     sql,
                     use_cube=bool(req.get("use_cube", True)),
                     approx_distinct=bool(req.get("approx_distinct", False)),
                     approx_topn=bool(req.get("approx_topn", False)),
                     params=req.get("params"),
-                    skip_result_cache=True,
                 )
                 route = self.engine.last_route
                 routes = list(self.engine.last_routes)
-                # planning-only belt: drop any deferred cache fill so it
-                # can't leak into a later /api/query response
-                self.engine.take_pending_cache(expect_df=df)
         except Exception as exc:
             self._reply(400, {"error": str(exc).split("\n", 1)[0]})
             return
@@ -229,12 +221,9 @@ class _Handler(BaseHTTPRequestHandler):
             try:
                 # Critical section covers ROUTING ONLY: engine.sql builds the
                 # (lazy) DataFrame and records last_route/last_routes on the
-                # engine; both are copied out before the lock drops. With the
-                # result cache enabled, the cache FILL is deferred too
-                # (defer_cache_fill set in make_server) — the pending fill is
-                # popped here and completed below, outside the lock, so a
-                # cacheable slow scan no longer serializes all connections
-                # (round-5 advisor finding #4).
+                # engine; both are copied out before the lock drops, and
+                # the collect below runs outside it, so a slow scan never
+                # serializes all connections.
                 with self.lock:
                     df = self.engine.sql(
                         sql,
@@ -245,7 +234,6 @@ class _Handler(BaseHTTPRequestHandler):
                     )
                     route = self.engine.last_route
                     routes = list(self.engine.last_routes)
-                    pending = self.engine.take_pending_cache(expect_df=df)
             except Exception as exc:
                 # planning failures are the client's problem: bad SQL, unknown
                 # tables/columns (the reference's SQLException path)
@@ -253,20 +241,8 @@ class _Handler(BaseHTTPRequestHandler):
                 return
             try:
                 # execution/collection outside the lock: concurrent requests'
-                # Spark jobs run in parallel (FIFO/FAIR across threads). When a
-                # deferred cache fill is pending, ONE collection both fills the
-                # cache and serves this response; oversized results fall back to
-                # the plain limited collect (and stay uncached).
-                cached_rows = (
-                    self.engine.complete_cache_fill(pending)
-                    if pending is not None
-                    else None
-                )
-                rows = (
-                    cached_rows[:limit]
-                    if cached_rows is not None
-                    else df.limit(limit).collect()
-                )
+                # Spark jobs run in parallel (FIFO/FAIR across threads)
+                rows = df.limit(limit).collect()
             except Exception as exc:  # runtime failure on a planned query
                 reason = self.engine.tracker.was_cancelled(qid)
                 if reason is not None:
@@ -323,9 +299,6 @@ def make_server(
         ...
         srv.shutdown()
     """
-    # the server owns this engine's collection discipline: cache fills run
-    # outside the routing lock via take_pending_cache/complete_cache_fill
-    engine.defer_cache_fill = True
     handler = type(
         "BoundHandler", (_Handler,), {"engine": engine, "lock": threading.Lock()}
     )

@@ -1,54 +1,22 @@
 """Regression tests for round-5 advisor findings (ADVICE.md r5):
 
-1. _maybe_cache must refuse to cache when ANY route of a multi-context
-   query carries a hybrid tail — not just routes[0]. A hybrid island at
-   position >0 cached once would serve a stale tail after stream appends.
-2. register_hybrid must refuse a realtime store without the __segment__
+1. register_hybrid must refuse a realtime store without the __segment__
    column: the boundary filter is a segment comparison, and without it the
    whole realtime dir unions with the batch partials (double counting).
-3. IncrementalDedup.refresh must return the DELTA pair count from the
+2. IncrementalDedup.refresh must return the DELTA pair count from the
    already-computed pairs DataFrame — no O(history) re-scan of the
    accumulated pair store per refresh.
-4. The query server defers result-cache fills outside its routing lock:
-   engine.sql under defer_cache_fill never collects; the fill is completed
-   by complete_cache_fill and serves the cache on the next request.
 """
 
 from __future__ import annotations
 
 import inspect
-import json
-import threading
-import urllib.request
-from types import SimpleNamespace
 
 import pytest
 from pyspark.sql import functions as F
 
 from kylin_on_parquet_v2_spark.pipeline import dedup as D
 from kylin_on_parquet_v2_spark.query.engine import OlapEngine
-from kylin_on_parquet_v2_spark.server import make_server
-from tests.conftest import SF_SMOKE
-
-
-def test_maybe_cache_skips_hybrid_island_beyond_first(spark):
-    """A hybrid-served island at routes[1] must block caching even when
-    routes[0] (and last_route) is a plain batch route."""
-    eng = OlapEngine(spark, result_cache_size=4)
-    plain = SimpleNamespace(hybrid_tail=None)
-    hybrid = SimpleNamespace(hybrid_tail="/tmp/rt")
-    eng.last_route = plain
-    eng.last_routes = [plain, hybrid]
-    df = spark.range(3)
-    out = eng._maybe_cache(("k",), df)
-    assert out is df  # returned un-cached, un-materialized
-    assert not eng._cache
-
-    # sanity: with no hybrid island anywhere, the same call DOES cache
-    eng.last_routes = [plain, plain]
-    out2 = eng._maybe_cache(("k2",), df)
-    assert ("k2",) in eng._cache
-    assert out2 is not df
 
 
 def test_register_hybrid_requires_segment_column(spark, tmp_path):
@@ -99,73 +67,6 @@ def test_incremental_refresh_returns_delta_pair_count(spark, tmp_path):
     # fewer than the accumulated store (pre-fix it returned the total)
     assert n2 < total
     assert n1 <= total
-
-
-@pytest.fixture(scope="module")
-def cached_server(spark, tpch_cube_store, tmp_path_factory):
-    from kylin_on_parquet_v2_spark.datasets import TPCH_CUBE, TPCH_MODEL
-    from tests.conftest import clone_cube_store
-
-    d = clone_cube_store(tpch_cube_store, str(tmp_path_factory.mktemp("adv6_cubes")))
-    eng = OlapEngine(
-        spark,
-        storage_dir=d,
-        result_cache_size=8,
-    )
-    eng.register_sources(SF_SMOKE)
-    eng.add_model(TPCH_MODEL)
-    eng.load_cube(TPCH_CUBE)
-    srv = make_server(eng)
-    t = threading.Thread(target=srv.serve_forever, daemon=True)
-    t.start()
-    base = f"http://127.0.0.1:{srv.server_address[1]}"
-    yield eng, base
-    srv.shutdown()
-
-
-def _post(base: str, payload: dict) -> tuple[int, dict]:
-    req = urllib.request.Request(
-        f"{base}/api/query",
-        data=json.dumps(payload).encode(),
-        headers={"Content-Type": "application/json"},
-        method="POST",
-    )
-    with urllib.request.urlopen(req) as resp:
-        return resp.status, json.loads(resp.read())
-
-
-def test_server_cache_fill_is_deferred_and_served(cached_server):
-    """With the result cache on, the fill happens via the deferred path
-    (no collection under the lock) and the second request hits the cache."""
-    eng, base = cached_server
-    assert eng.defer_cache_fill  # make_server enabled deferral
-    sql = (
-        "select l_returnflag, sum(l_quantity) as s "
-        "from lineitem group by l_returnflag order by l_returnflag"
-    )
-    code, body1 = _post(base, {"sql": sql})
-    assert code == 200, body1
-    # the deferred fill completed outside the lock and populated the cache
-    assert eng._pending_cache is None
-    assert len(eng._cache) == 1
-    code, body2 = _post(base, {"sql": sql})
-    assert code == 200 and body2["rows"] == body1["rows"]
-
-
-def test_defer_cache_fill_sql_does_not_collect(spark):
-    """Under defer_cache_fill, engine.sql parks the fill instead of
-    collecting; complete_cache_fill returns the rows and stores them."""
-    eng = OlapEngine(spark, result_cache_size=4)
-    eng.register_sources(SF_SMOKE)
-    eng.defer_cache_fill = True
-    df = eng.sql("select count(*) as c from region")
-    assert not eng._cache  # nothing cached yet
-    pending = eng.take_pending_cache()
-    assert pending is not None
-    rows = eng.complete_cache_fill(pending)
-    assert rows is not None and rows[0]["c"] == df.collect()[0]["c"]
-    assert len(eng._cache) == 1
-    assert eng.take_pending_cache() is None  # popped exactly once
 
 
 def test_ngram_jaccard_cap_defaults_on():

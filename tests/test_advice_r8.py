@@ -3,8 +3,6 @@
 #1 (medium): streaming_decontaminate must be replay-idempotent — foreachBatch
 is at-least-once, so a replayed epoch must rewrite its own output, not append
 a second copy.
-#2 (low): explain surfaces must bypass the result cache so the reported plan
-is the statement's real physical plan, never a LocalTableScan of cached rows.
 #3 (low): the streaming gate corpus fixture must not leak temp dirs / rely on
 private attributes (covered by the gate returning (query, eval_grams) — used
 here — plus the corpus query staying oracle-green).
@@ -58,65 +56,6 @@ def test_streaming_gate_replay_is_idempotent(spark, tmp_path):
         map(str, spark.read.parquet(out_dir).drop("__epoch").collect())
     )
     assert replay_rows == first_rows
-
-
-def test_explain_bypasses_result_cache(spark, tmp_path):
-    from kylin_on_parquet_v2_spark.query.engine import OlapEngine
-
-    eng = OlapEngine(
-        spark, storage_dir=str(tmp_path / "cubes"), result_cache_size=4
-    )
-    eng.register_sources(SF_SMOKE)
-    q = "select r_name from region order by r_name"
-    eng.sql(q).collect()  # fills the cache
-    # sanity: without the bypass the SECOND call serves collected rows —
-    # its "plan" is a scan of the cache, not of the statement
-    cached_plan = eng.sql(q)._jdf.queryExecution().executedPlan().toString()
-    assert "ExistingRDD" in cached_plan  # createDataFrame(cached rows)
-    # explain() must show the real plan even with the cache hot
-    plan = eng.explain(q)
-    assert "ExistingRDD" not in plan and "LocalTableScan" not in plan
-    assert "parquet" in plan  # the statement's actual scan
-    # and the bypass flag leaves the cache itself untouched (still a hit)
-    still_cached = eng.sql(q)._jdf.queryExecution().executedPlan().toString()
-    assert "ExistingRDD" in still_cached
-
-
-def test_server_explain_reports_real_plan_on_cache_hit(spark, tmp_path):
-    import json
-    import threading
-    import urllib.request
-
-    from kylin_on_parquet_v2_spark.query.engine import OlapEngine
-    from kylin_on_parquet_v2_spark.server import make_server
-
-    eng = OlapEngine(
-        spark, storage_dir=str(tmp_path / "cubes"), result_cache_size=4
-    )
-    eng.register_sources(SF_SMOKE)
-    srv = make_server(eng)
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
-    base = f"http://127.0.0.1:{srv.server_address[1]}"
-
-    def post(path, payload):
-        req = urllib.request.Request(
-            f"{base}{path}",
-            data=json.dumps(payload).encode(),
-            headers={"Content-Type": "application/json"},
-            method="POST",
-        )
-        with urllib.request.urlopen(req) as resp:
-            return json.loads(resp.read())
-
-    try:
-        sql = "select n_name from nation order by n_name"
-        post("/api/query", {"sql": sql})  # cache fill
-        body = post("/api/explain", {"sql": sql})
-        assert "ExistingRDD" not in body["plan"]
-        assert "LocalTableScan" not in body["plan"]
-        assert "parquet" in body["plan"]
-    finally:
-        srv.shutdown()
 
 
 def test_gate_fixture_reuses_run_dir(spark):

@@ -84,7 +84,7 @@ def _run_counting_extends(eng, monkeypatch):
         return real(*a, **kw)
 
     monkeypatch.setattr(GD, "extend_global_dict", counting)
-    df = eng.sql(SQL, skip_result_cache=True)
+    df = eng.sql(SQL)
     rows = [tuple(r) for r in df.collect()]
     route = eng.last_route
     assert route is not None and route.hybrid_tail, route

@@ -198,7 +198,6 @@ def test_merge_widens_ranges_and_stops_pruning(eng, spark):
     merged = segs[0]
     merge_segments(spark, inst, segs, merged)
     eng._route_memo.clear()
-    eng._cache.clear()
     mn, mx = inst.dim_ranges[merged]["o_month"]
     assert (mn, mx) == (1, 3)
     eng.sql(

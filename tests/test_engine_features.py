@@ -1,5 +1,5 @@
 """Engine facade features: SQL transformer chain (QueryUtil.massageSql
-parity) and the opt-in LRU result cache (QueryService result cache parity)."""
+parity) and query metrics (QueryMetrics parity)."""
 
 from __future__ import annotations
 
@@ -44,7 +44,6 @@ def engine(spark, tpch_cube_store, tmp_path_factory):
         spark,
         storage_dir=d,
         max_result_rows=1000,
-        result_cache_size=8,
     )
     eng.register_sources(SF_SMOKE)
     eng.add_model(TPCH_MODEL)
@@ -63,53 +62,6 @@ def test_odbc_escapes_run_end_to_end(engine):
 def test_forced_limit_applied(engine):
     df = engine.sql("select l_orderkey from lineitem")
     assert df.count() == 1000  # unbounded select got the forced LIMIT
-
-
-def test_result_cache_hits_and_preserves_route(engine):
-    sql = "select l_returnflag, sum(l_quantity) as s from lineitem group by l_returnflag"
-    first = engine.sql(sql).collect()
-    assert engine.last_route is not None
-    assert len(engine._cache) >= 1
-    # poison last_route, then hit the cache: route must be restored
-    engine.last_route = None
-    second = engine.sql(sql).collect()
-    assert engine.last_route is not None
-    assert sorted(map(tuple, first)) == sorted(map(tuple, second))
-
-
-def test_result_cache_invalidated_on_build(engine):
-    sql = "select count(*) as n from lineitem"
-    engine.sql(sql)
-    assert engine._cache
-    engine.build_cube(TPCH_CUBE)
-    assert not engine._cache  # epoch bumped, cache cleared
-
-
-def test_cache_lru_bound(spark, tmp_path):
-    eng = OlapEngine(spark, storage_dir=str(tmp_path), result_cache_size=2)
-    eng.register_sources(SF_SMOKE)
-    for i in range(4):
-        eng.sql(f"select {i} as k")
-    assert len(eng._cache) == 2
-
-
-def test_cache_never_materializes_oversized_results(spark, tmp_path):
-    """Round-3 verdict: caching must not pin an unbounded result set on the
-    driver — a result over the cap is returned complete but NOT cached."""
-    eng = OlapEngine(
-        spark,
-        storage_dir=str(tmp_path),
-        result_cache_size=4,
-        max_result_rows=50,
-        transformers=[],  # no forced LIMIT: the cap alone must protect
-    )
-    eng.register_sources(SF_SMOKE)
-    big = eng.sql("select l_orderkey from lineitem")
-    assert big.count() > 50  # answer complete, not truncated
-    assert not eng._cache  # ...but never materialized into the cache
-    small = eng.sql("select count(*) as n from lineitem")
-    assert small.count() == 1
-    assert len(eng._cache) == 1
 
 
 def test_query_metrics_track_hit_ratio(spark, tmp_path):

@@ -190,9 +190,10 @@ def test_hybrid_parity_at_any_split(spark, tmp_path_factory, split):
 
 
 def test_hybrid_results_never_cached(spark, engine, tmp_path_factory):
-    """The result cache must not pin hybrid answers: new realtime data
-    lands outside the engine's cache epoch, so a cached tail would go
-    stale. Fresh realtime rows must show up on the SECOND identical query."""
+    """A route-memo replay reuses the decision, never the rows: new
+    realtime data lands outside the engine's cache epoch, so the replayed
+    hybrid route must re-read the realtime tail. Fresh realtime rows must
+    show up on the SECOND identical query."""
     import pyspark.sql.functions as F
 
     from kylin_on_parquet_v2_spark.metadata import (
@@ -213,7 +214,6 @@ def test_hybrid_results_never_cached(spark, engine, tmp_path_factory):
     eng = OlapEngine(
         spark,
         storage_dir=str(tmp_path_factory.mktemp("hc_cubes")),
-        result_cache_size=8,
     )
     eng.add_model(DataModel(name="hc_star", fact_table="hc_fact", partition_column="d"))
     eng.build_cube(
@@ -237,8 +237,10 @@ def test_hybrid_results_never_cached(spark, engine, tmp_path_factory):
     ).selectExpr("k", "cast(d as date) as d", "v").withColumn(
         "__segment__", F.date_format("d", "yyyy-MM-dd")
     ).write.mode("append").partitionBy("__segment__").parquet(rt_dir)
+    hits = eng.metrics["route_memo_hits"]
     n2 = eng.sql(q).collect()[0].n
-    assert n2 == n1 + 2, (n1, n2)  # a cached result would have frozen n1
+    assert eng.metrics["route_memo_hits"] == hits + 1  # served by replay
+    assert n2 == n1 + 2, (n1, n2)  # reused rows would have frozen n1
 
 
 def test_hybrid_boundary_moves_after_refresh(engine):

@@ -491,6 +491,18 @@ def test_ivf_query_set_bounded(spark, tmp_path, monkeypatch):
         S.ann_ivf_topk(emb, emb.filter(F.col("vec_id") < 4), k=2)
 
 
+def test_vectorized_topk_query_set_bounded(spark, monkeypatch):
+    """The vectorized brute-force top-k collects its query set under the
+    same IVF_MAX_QUERIES bound: a larger set raises a reason naming the
+    limit instead of being collected to the driver."""
+    emb = spark.table("embeddings").filter(F.col("vec_id") < 40)
+    monkeypatch.setattr(S, "IVF_MAX_QUERIES", 3)
+    ok = S.brute_force_topk_vectorized(emb, emb.filter(F.col("vec_id") < 3), k=2)
+    assert ok.count() > 0
+    with pytest.raises(ValueError, match="IVF_MAX_QUERIES=3"):
+        S.brute_force_topk_vectorized(emb, emb.filter(F.col("vec_id") < 4), k=2)
+
+
 def _dir_bytes(root):
     """{relative file path: bytes} for every data file under a list dir."""
     import os

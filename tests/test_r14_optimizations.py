@@ -317,7 +317,9 @@ def test_lloyd_array_agg_matches_columns(spark):
     from kylin_on_parquet_v2_spark.session import register_views
 
     register_views(spark, SF_SMOKE)
-    emb = spark.table("embeddings").limit(200)
+    # a deterministic frame: both sides read it once per Lloyd step, and
+    # an unordered limit() may pick different rows on each read
+    emb = spark.table("embeddings").filter("vec_id < 200")
     cents_new = S.train_ivf_centroids(emb, n_lists=4, iters=2, dim=64)
     # reference: per-dim avg columns over the same assignment pipeline
     from kylin_on_parquet_v2_spark.pipeline.similarity import ivf_assign, ivf_centroids

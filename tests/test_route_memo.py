@@ -106,25 +106,6 @@ def test_validate_bypasses_memo(eng):
     assert eng.metrics["route_memo_hits"] == hits
 
 
-def test_stale_pending_cache_cleared_on_next_sql(spark, tmp_path):
-    """Embedded use alongside the server: a pending fill parked by one call
-    must not survive into the next (advisor r6 #3) — and the handler-side
-    expect_df guard refuses a pending parked for a different DataFrame."""
-    e = OlapEngine(spark, storage_dir=str(tmp_path), result_cache_size=4)
-    e.register_sources(SF_SMOKE)
-    e.defer_cache_fill = True
-    df1 = e.sql("select 1 as a")
-    assert e._pending_cache is not None
-    # a second sql() clears the stale slot on entry before parking its own
-    df2 = e.sql("select 2 as b")
-    p = e.take_pending_cache(expect_df=df2)
-    assert p is not None and p[1] is df2
-    # expect_df mismatch: pending for df2 is never served as df1's answer
-    e.sql("select 3 as c")
-    assert e.take_pending_cache(expect_df=df1) is None
-    assert e._pending_cache is None  # discarded, not left behind
-
-
 def test_concurrent_mixed_queries_thread_safe(eng):
     """Many threads hammering a mix of routed / pushdown / repeated queries
     must produce exactly the single-threaded answers — no memo corruption,

@@ -446,6 +446,11 @@ def test_explain_reports_route(engine):
     assert out.startswith("route: cube=tpch_cube")
     out2 = engine.explain("select l_shipdate from lineitem limit 1")
     assert out2.startswith("route: none")
+    # the plan is the statement's real execution: a Parquet scan, never a
+    # scan of rows already collected on the driver
+    for plan in (out, out2):
+        assert "parquet" in plan
+        assert "ExistingRDD" not in plan and "LocalTableScan" not in plan
 
 
 GROUPING_SET_SQL = [

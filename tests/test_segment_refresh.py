@@ -114,9 +114,9 @@ def test_refresh_is_idempotent(spark, engine):
         _rows(late=True), "etype string, d date, user_id long, v double"
     ).createOrReplaceTempView("sr_fact")
     engine.refresh_segment("sr_cube", "2024-03-02")
-    once = [tuple(r) for r in engine.sql(SQL, skip_result_cache=True).collect()]
+    once = [tuple(r) for r in engine.sql(SQL).collect()]
     engine.refresh_segment("sr_cube", "2024-03-02")
-    twice = [tuple(r) for r in engine.sql(SQL, skip_result_cache=True).collect()]
+    twice = [tuple(r) for r in engine.sql(SQL).collect()]
     assert once == twice
     # no staging residue in any layout dir
     inst = engine.cubes["sr_cube"]
@@ -170,7 +170,7 @@ def test_refresh_dict_swap_crash_is_repaired(spark, engine, monkeypatch):
     # layouts were never touched by the crashed attempt: still the OLD data
     got = {
         r.etype: (r.n, r.sv, r.u)
-        for r in engine.sql(SQL, skip_result_cache=True).collect()
+        for r in engine.sql(SQL).collect()
     }
     assert got == before
 
@@ -178,7 +178,7 @@ def test_refresh_dict_swap_crash_is_repaired(spark, engine, monkeypatch):
     engine.refresh_segment("sr_cube", "2024-03-02")
     after = {
         r.etype: (r.n, r.sv, r.u)
-        for r in engine.sql(SQL, validate=True, skip_result_cache=True).collect()
+        for r in engine.sql(SQL, validate=True).collect()
     }
     assert after == {"click": (6, 6.0, 2), "view": (7, 11.0, 3)}
 
@@ -202,7 +202,7 @@ def test_refresh_full_retraction_removes_segment(spark, engine):
     engine.refresh_segment("sr_cube", "2024-03-02")
     after = {
         r.etype: (r.n, r.sv, r.u)
-        for r in engine.sql(SQL, validate=True, skip_result_cache=True).collect()
+        for r in engine.sql(SQL, validate=True).collect()
     }
     assert after == {"click": (4, 4.0, 2), "view": (4, 4.0, 2)}
     assert "2024-03-02" not in inst.segments(spark)
@@ -242,7 +242,7 @@ def test_retraction_crash_midway_is_resumable(spark, engine):
     # segment from every cuboid, whether or not its dir still exists
     mid = {
         r.etype: (r.n, r.sv, r.u)
-        for r in engine.sql(SQL, skip_result_cache=True).collect()
+        for r in engine.sql(SQL).collect()
     }
     assert mid == {"click": (4, 4.0, 2), "view": (4, 4.0, 2)}
     # the base dir survives, so the segment is still addressable and the
@@ -252,7 +252,7 @@ def test_retraction_crash_midway_is_resumable(spark, engine):
     assert "2024-03-02" not in inst.segments(spark)
     after = {
         r.etype: (r.n, r.sv, r.u)
-        for r in engine.sql(SQL, validate=True, skip_result_cache=True).collect()
+        for r in engine.sql(SQL, validate=True).collect()
     }
     assert after == mid
     for path in inst.layouts.values():

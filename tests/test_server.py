@@ -180,10 +180,15 @@ def _post_path(base: str, path: str, payload: dict) -> tuple[int, dict]:
         return e.code, json.loads(e.read())
 
 
+def _assert_real_scan(plan: str) -> None:
+    assert "parquet" in plan.lower()
+    assert "ExistingRDD" not in plan and "LocalTableScan" not in plan
+
+
 def test_explain_endpoint_routes_without_executing(served):
     """/api/explain returns the realization + formatted physical plan for
-    both a routed and a pushdown statement, and never bleeds a deferred
-    cache fill into the next /api/query."""
+    both a routed and a pushdown statement — the real Parquet scan, never
+    a scan of collected rows — and leaves the next /api/query unaffected."""
     _, base = served
     routed_sql = (
         "select l_returnflag, sum(l_quantity) as s from lineitem "
@@ -195,6 +200,7 @@ def test_explain_endpoint_routes_without_executing(served):
     assert r["route"]["cube"]
     assert "plan" in r and "Physical Plan" in r["plan"]
     assert "rows" not in r  # planning only
+    _assert_real_scan(r["plan"])
 
     pd_sql = (
         "select l_returnflag, count(*) as n from lineitem "
@@ -204,8 +210,9 @@ def test_explain_endpoint_routes_without_executing(served):
     assert code == 200, p
     assert p["is_pushdown"] is True and p["route"] is None
     assert "Physical Plan" in p["plan"]
+    _assert_real_scan(p["plan"])
 
-    # a subsequent real query is unaffected (no stale pending cache)
+    # a subsequent real query is unaffected
     code, q = _post(base, {"sql": routed_sql})
     assert code == 200 and q["row_count"] > 0
 

@@ -759,9 +759,9 @@ def test_rewrite_survives_route_memo_replay(engine):
         "select date_trunc('hour', ts) as h, count(*) as n "
         "from tg_events group by date_trunc('hour', ts) order by h"
     )
-    first = [tuple(r) for r in engine.sql(sql, skip_result_cache=True).collect()]
+    first = [tuple(r) for r in engine.sql(sql).collect()]
     assert engine.last_route is not None
-    second = [tuple(r) for r in engine.sql(sql, skip_result_cache=True).collect()]
+    second = [tuple(r) for r in engine.sql(sql).collect()]
     assert engine.last_route is not None
     assert first == second and len(first) == 5
 
