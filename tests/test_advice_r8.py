@@ -3,6 +3,9 @@
 #1 (medium): streaming_decontaminate must be replay-idempotent — foreachBatch
 is at-least-once, so a replayed epoch must rewrite its own output, not append
 a second copy.
+#2 (low): explain surfaces must report the statement's real physical plan,
+never a LocalTableScan/ExistingRDD of collected rows, also when the same
+statement ran before (a route-memo replay).
 #3 (low): the streaming gate corpus fixture must not leak temp dirs / rely on
 private attributes (covered by the gate returning (query, eval_grams) — used
 here — plus the corpus query staying oracle-green).
@@ -56,6 +59,63 @@ def test_streaming_gate_replay_is_idempotent(spark, tmp_path):
         map(str, spark.read.parquet(out_dir).drop("__epoch").collect())
     )
     assert replay_rows == first_rows
+
+
+def test_explain_bypasses_result_cache(spark, tmp_path):
+    """Engine has no result cache: a repeated statement is a memo replay of
+    its routing decision, and explain still shows the real Parquet scan."""
+    from kylin_on_parquet_v2_spark.query.engine import OlapEngine
+
+    eng = OlapEngine(spark, storage_dir=str(tmp_path / "cubes"))
+    eng.register_sources(SF_SMOKE)
+    q = "select r_name from region order by r_name"
+    first = [r.r_name for r in eng.sql(q).collect()]
+    # the repeated statement is re-planned lazily, not served as rows
+    again = eng.sql(q)
+    repeat_plan = again._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in repeat_plan
+    assert [r.r_name for r in again.collect()] == first
+    plan = eng.explain(q)
+    assert "ExistingRDD" not in plan and "LocalTableScan" not in plan
+    assert "parquet" in plan  # the statement's actual scan
+
+
+def test_server_explain_reports_real_plan_on_cache_hit(spark, tmp_path):
+    """/api/explain after /api/query of the same statement reports the real
+    Parquet scan, not a scan of collected rows."""
+    import json
+    import threading
+    import urllib.request
+
+    from kylin_on_parquet_v2_spark.query.engine import OlapEngine
+    from kylin_on_parquet_v2_spark.server import make_server
+
+    eng = OlapEngine(spark, storage_dir=str(tmp_path / "cubes"))
+    eng.register_sources(SF_SMOKE)
+    srv = make_server(eng)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    base = f"http://127.0.0.1:{srv.server_address[1]}"
+
+    def post(path, payload):
+        req = urllib.request.Request(
+            f"{base}{path}",
+            data=json.dumps(payload).encode(),
+            headers={"Content-Type": "application/json"},
+            method="POST",
+        )
+        with urllib.request.urlopen(req, timeout=120) as resp:
+            return json.loads(resp.read())
+
+    try:
+        sql = "select n_name from nation order by n_name"
+        post("/api/query", {"sql": sql})
+        body = post("/api/explain", {"sql": sql})
+        assert "ExistingRDD" not in body["plan"]
+        assert "LocalTableScan" not in body["plan"]
+        assert "parquet" in body["plan"]
+    finally:
+        srv.shutdown()
+        srv.server_close()
 
 
 def test_gate_fixture_reuses_run_dir(spark):
