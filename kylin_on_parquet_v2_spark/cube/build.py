@@ -248,10 +248,32 @@ class CubeInstance:
     #: correctness no longer depends on callers driving cube/merge.py
     #: directly remembering to clear engine._route_memo. Process-local by
     #: design (not persisted): a reloaded instance is a NEW object and
-    #: load_cube clears the memo wholesale.
+    #: load_cube clears the memo wholesale. Every pass that removes or
+    #: swaps a layout's files bumps it right after each layout's change:
+    #: a Spark scan fixes its file listing when it is created, so a scan
+    #: (or a memoized plan over one) from an older epoch may name files
+    #: that are gone.
     lifecycle_epoch: int = field(default=0, repr=False)
+    #: (cuboid_id, lifecycle_epoch) -> the READY-pruned layout scan, so
+    #: repeated routed reads within one epoch share one scan definition
+    #: instead of re-reading the path and re-filtering per query. Only
+    #: the current epoch's entries are kept. These are lazy plans: no
+    #: rows are collected or persisted, and each query re-reads the files
+    _scans: dict = field(default_factory=dict, repr=False)
 
     def layout_df(self, spark: SparkSession, cuboid: Cuboid) -> DataFrame:
+        """The layout's scan, READY-pruned on a segmented cube; one
+        DataFrame per layout and lifecycle epoch."""
+        key = (cuboid.cuboid_id, self.lifecycle_epoch)
+        df = self._scans.get(key)
+        if df is None:
+            df = self._ready_scan(spark, cuboid)
+            scans = {k: v for k, v in self._scans.items() if k[1] == key[1]}
+            scans[key] = df
+            self._scans = scans
+        return df
+
+    def _ready_scan(self, spark: SparkSession, cuboid: Cuboid) -> DataFrame:
         df = self._layout_df_raw(spark, cuboid)
         if self.segmented:
             committed = self.committed_segments(spark)
@@ -762,6 +784,7 @@ class CubeBuilder:
                 )
                 extended.write.mode("overwrite").parquet(dict_path + "_staging")
                 GD.publish_dict_staging(layout_fs, dict_path)
+                inst.lifecycle_epoch += 1  # plans over the old dictionary expire
             else:
                 d = GD.build_global_dict(flat, param)
                 d.write.mode("overwrite").parquet(dict_path)
@@ -1302,6 +1325,7 @@ class CubeBuilder:
                     if fs.exists(seg_dir):
                         fs.rmtree(seg_dir)
                     fs.rename(staged_seg, seg_dir)
+                    inst.lifecycle_epoch += 1  # scans listed before the swap expire
                 if fs.exists(staging):
                     fs.rmtree(staging)
                 fs.remove(sentinel)
@@ -1356,6 +1380,7 @@ class CubeBuilder:
                 if fs.exists(seg_dir):
                     fs.rename(seg_dir, tomb)
                     fs.rmtree(tomb)
+                    inst.lifecycle_epoch += 1  # scans listing the dir expire
                 self.spark.catalog.refreshByPath(path)
                 tname = inst.layout_tables.get(cuboid_id)
                 if tname:
@@ -1376,6 +1401,7 @@ class CubeBuilder:
             )
             extended.write.mode("overwrite").parquet(dict_path + "_staging")
             GD.publish_dict_staging(layout_fs, dict_path)
+            inst.lifecycle_epoch += 1  # plans over the old dictionary expire
             written = self.spark.read.parquet(dict_path)
             inst.dict_schemas[param] = written.schema
             flat_seg = GD.encode_column(flat_seg, written, param)
@@ -1420,6 +1446,9 @@ class CubeBuilder:
             if fs.exists(seg_dir):
                 fs.rmtree(seg_dir)
             fs.rename(staged_seg, seg_dir)
+            # scans and frozen plans listed before this layout's swap name
+            # removed files: expire them now, not after the last layout
+            inst.lifecycle_epoch += 1
             fs.rmtree(staging)
             fs.remove(sentinel)
             self.spark.catalog.refreshByPath(path)
@@ -1503,6 +1532,7 @@ class CubeBuilder:
             # source is safe; the swap keeps readers of the old dict valid
             extended.write.mode("overwrite").parquet(dict_path + "_staging")
             GD.publish_dict_staging(layout_fs, dict_path)
+            inst.lifecycle_epoch += 1  # plans over the old dictionary expire
             written = self.spark.read.parquet(dict_path)
             inst.dict_schemas[param] = written.schema
             flat_new = GD.encode_column(flat_new, written, param)
@@ -1535,11 +1565,10 @@ class CubeBuilder:
         for cuboid, parent in tree:
             layers.setdefault(cuboid.n_dims, []).append((cuboid, parent))
 
-        def _one(cuboid: Cuboid, parent: Cuboid | None) -> tuple[int, str]:
-            path = inst.layouts[cuboid.cuboid_id]
-            # idempotent re-append: a CRASHED previous attempt may have left
-            # partial (uncommitted) dirs for these segments on this layout —
-            # drop them first so the rerun lands exactly one copy of each row
+        # idempotent re-append: a CRASHED previous attempt may have left
+        # partial (uncommitted) dirs for these segments on a layout — drop
+        # them first so the rerun lands exactly one copy of each row
+        for cuboid_id, path in inst.layouts.items():
             fs = FS.fs_for(path, self.spark)
             stale = False
             for val in segments:
@@ -1548,10 +1577,14 @@ class CubeBuilder:
                     fs.rmtree(seg_dir)
                     stale = True
             if stale:
+                inst.lifecycle_epoch += 1  # scans listing the dirs expire
                 self.spark.catalog.refreshByPath(path)
-                t = inst.layout_tables.get(cuboid.cuboid_id)
+                t = inst.layout_tables.get(cuboid_id)
                 if t is not None:
                     self.spark.catalog.refreshTable(t)
+
+        def _one(cuboid: Cuboid, parent: Cuboid | None) -> tuple[int, str]:
+            path = inst.layouts[cuboid.cuboid_id]
             if parent is None:
                 df = self._agg_from_flat(flat_new, cuboid, True)
             else:

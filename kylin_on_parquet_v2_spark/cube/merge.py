@@ -100,6 +100,7 @@ def merge_segments(
                 if fs.exists(final_dir):
                     fs.rmtree(final_dir)
                 fs.rename(staging, final_dir)
+                inst.lifecycle_epoch += 1  # scans listed before the swap expire
             fs.remove(sentinel)
             continue
         if (
@@ -188,6 +189,9 @@ def merge_segments(
         if fs.exists(final_dir):
             fs.rmtree(final_dir)
         fs.rename(staging, final_dir)
+        # scans and frozen plans listed before this layout's swap name
+        # removed files: expire them now, not after the last layout
+        inst.lifecycle_epoch += 1
         fs.remove(sentinel)
 
     # Range bookkeeping (reference: per-segment TSRange): the merged dir's
@@ -265,6 +269,7 @@ def apply_retention(
             seg_dir = os.path.join(path, f"{SEGMENT_COL}={seg}")
             if fs.exists(seg_dir):
                 fs.rmtree(seg_dir)
+        inst.lifecycle_epoch += 1  # scans listing the removed dirs expire
     for seg in drop:
         inst.segment_ranges.pop(seg, None)
         inst.dim_ranges.pop(seg, None)

@@ -64,9 +64,11 @@ class QueryTracker:
     ``start``/``finish`` bracket a query's execution window (set up by
     :meth:`OlapEngine.tracked_query`); :meth:`stop_query` cancels one by id
     (``cancelJobGroup``); a daemon watchdog thread — started lazily the
-    first time any budget exists — sweeps the registry every
-    ``detect_interval_sec`` and cancels queries past their budget, exactly
-    the reference's detector loop (``BadQueryDetector.java:129-147``).
+    first time any budget exists or a query is stopped — sweeps the
+    registry every ``detect_interval_sec``, cancels queries past their
+    budget, exactly the reference's detector loop
+    (``BadQueryDetector.java:129-147``), and re-cancels the jobs of every
+    stopped query still running.
     """
 
     #: finished-query cancellation verdicts kept for post-mortem lookup
@@ -228,6 +230,9 @@ class QueryTracker:
             sc._jsc.sc().cancelJobGroupAndFutureJobs(group_id)
         except Exception:  # pragma: no cover — private-API shape drift
             sc.cancelJobGroup(group_id)
+        # the future-cancel misses AQE's shuffle-map stages submitted after
+        # it: the watchdog sweep re-cancels the group until the query ends
+        self._ensure_watchdog()
         return True
 
     # -- watchdog (BadQueryDetector.java:129-147 parity) ----------------------
@@ -257,9 +262,11 @@ class QueryTracker:
     def _detect_once(self) -> None:
             now = time.monotonic()
             over: list[tuple[str, float]] = []
+            stopped: list[str] = []
             with self._lock:
                 for rq in self._running.values():
                     if rq.cancelled:
+                        stopped.append(rq.group_id)
                         continue
                     budget = (
                         rq.timeout_sec
@@ -290,6 +297,13 @@ class QueryTracker:
                     # level 2: kill past the budget
                     if budget is not None and elapsed >= budget:
                         over.append((rq.query_id, budget))
+            # a stop that landed before the query's first job: the
+            # future-cancel covers later result jobs, not the AQE
+            # shuffle-map stages submitted meanwhile — cancel the group's
+            # active jobs again on every sweep until the query finishes
+            sc = self.spark.sparkContext
+            for group_id in stopped:
+                sc.cancelJobGroup(group_id)
             for qid, budget in over:
                 self.stop_query(
                     qid,

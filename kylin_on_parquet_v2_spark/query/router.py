@@ -1072,9 +1072,10 @@ def _derived_prefilter(
             df = df.filter(F.col(fk).isin(list({v[i] for v in vals})))
         return df
 
+    layout_cols = set(inst.layout_schemas[route.cuboid.cuboid_id].fieldNames())
     for lk in route.derived:
         fks, pks = lk.join.foreign_key, lk.join.primary_key
-        if any(fk not in df.columns for fk in fks):
+        if any(fk not in layout_cols for fk in fks):
             continue
         for conj in _split_conjuncts(filter_sql):
             # key by lookup NAME + pk tuple: column_tables values are lookup
@@ -1147,15 +1148,14 @@ def apply_derived_joins(df: DataFrame, route: Route, inst: CubeInstance, spark) 
     return df
 
 
-def _typed_segment_values(df: DataFrame, values: list[str]) -> list:
-    """Segment-dir strings converted to the layout's inferred partition
-    dtype (DateType/TimestampType dirs read back typed), so partition
+def _typed_segment_values(dtype, values: list[str]) -> list:
+    """Segment-dir strings converted to the layout's partition ``dtype``
+    (DateType/TimestampType dirs read back typed), so partition
     predicates stay metadata-prunable. Unconvertible values fall back to
     the raw string — the comparison then degrades to a row filter, which
     is still correct."""
     from pyspark.sql.types import DateType, TimestampType
 
-    dtype = df.schema[SEGMENT_COL].dataType
     out: list = []
     for v in values:
         try:
@@ -1180,6 +1180,10 @@ def routed_layout_scan(
     than finalized aggregates)."""
     digest = rewrite_time_grains(digest, inst)
     df = inst.layout_df(spark, route.cuboid)
+    # column presence and types come from the recorded layout schema, not
+    # from df.columns/df.schema (each of those is a JVM round trip)
+    schema = inst.layout_schemas[route.cuboid.cuboid_id]
+    cols = set(schema.fieldNames())
     # segment pruning first: these predicates hit the partition column, so
     # Catalyst turns them into PartitionFilters (no data read outside range)
     for pred in route.segment_filters:
@@ -1194,12 +1198,14 @@ def routed_layout_scan(
         # to a post-scan row filter.
         df = df.filter(
             ~F.col(SEGMENT_COL).isin(
-                _typed_segment_values(df, route.segment_reject)
+                _typed_segment_values(
+                    schema[SEGMENT_COL].dataType, route.segment_reject
+                )
             )
         )
-    if SEGMENT_COL in df.columns:
+    if SEGMENT_COL in cols:
         df = df.drop(SEGMENT_COL)
-    if route.shard_eq is not None and SHARD_COL in df.columns:
+    if route.shard_eq is not None and SHARD_COL in cols:
         # shard-dir pruning: compute the literal's shard id with the SAME
         # hash/type the write used (Spark's Murmur3 must not be
         # reimplemented driver-side). Over a one-row inline table the
@@ -1213,7 +1219,7 @@ def routed_layout_scan(
                 spark.sql("VALUES (0)")
                 .select(
                     F.pmod(
-                        F.hash(F.expr(lit_sql).cast(df.schema[col_name].dataType)),
+                        F.hash(F.expr(lit_sql).cast(schema[col_name].dataType)),
                         F.lit(inst.desc.shard_buckets),
                     ).alias("k")
                 )
@@ -1221,7 +1227,7 @@ def routed_layout_scan(
             )
             inst.shard_probe_cache[ck] = k
         df = df.filter(F.col(SHARD_COL) == k)
-    if SHARD_COL in df.columns:
+    if SHARD_COL in cols:
         df = df.drop(SHARD_COL)
 
     # derived-filter translate FIRST (DerivedProcess parity): conjuncts on
