@@ -26,16 +26,29 @@ from __future__ import annotations
 import datetime as _dt
 import re
 from dataclasses import dataclass, field
+from functools import partial
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from kylin_on_parquet_v2_spark.cube.build import SEGMENT_COL, SHARD_COL, CubeInstance
+from kylin_on_parquet_v2_spark.cube import dictionary as GD
+from kylin_on_parquet_v2_spark.cube.build import (
+    SEGMENT_COL,
+    SHARD_COL,
+    CubeInstance,
+    join_null_safe,
+)
 from kylin_on_parquet_v2_spark.cube.cuboid import Cuboid
 from kylin_on_parquet_v2_spark.metadata.cube import MeasureDesc
 from kylin_on_parquet_v2_spark.metadata.model import JoinTable
 from kylin_on_parquet_v2_spark.query.digest import AggCall, SqlDigest
 from kylin_on_parquet_v2_spark.query.time_rewrite import rewrite_time_grains
+
+
+#: re-aggregation of a stored (or partial) measure per SQL aggregate —
+#: COUNT partials merge by SUM (CuboidAggregator.scala:86-91 applies the
+#: same COUNT->SUM rule when re-aggregating a child layout from a parent)
+MERGE = {"COUNT": F.sum, "SUM": F.sum, "MIN": F.min, "MAX": F.max}
 
 
 @dataclass
@@ -608,6 +621,36 @@ def _kll_measure_for(col: str, inst: CubeInstance) -> MeasureDesc | None:
         ):
             return m
     return None
+
+
+def percentile_sketch(col: str, inst: CubeInstance):
+    """The stored sketch serving PERCENTILE over ``col``: the fixed-bin
+    histogram measure when the cube declares one, else the KLL measure
+    (plan_route routes no percentile without one of them).
+
+    Returns ``(measure, build, quantile)``. ``build(df, keys)`` sketches raw
+    rows at grain ``keys`` into a column named like the stored measure (the
+    hybrid tail's state); ``quantile(q)`` reads q from the re-merged state,
+    one merge expression shared by every quantile asked of the column."""
+    from kylin_on_parquet_v2_spark.cube import kll as KLL
+    from kylin_on_parquet_v2_spark.cube import measures as M
+
+    m = _hist_measure_for(col, inst)
+    if m is not None:
+
+        def build(df: DataFrame, keys: list) -> DataFrame:
+            return df.groupBy(*keys).agg(M.hist_build(m.function, m.name))
+
+        merged, pct = M.hist_reagg(m.function, m.name), M.hist_percentile
+    else:
+        m = _kll_measure_for(col, inst)
+
+        def build(df: DataFrame, keys: list) -> DataFrame:
+            # two-phase: bounded per-partition partials even on a hot tail
+            return KLL.kll_build_two_phase(df, list(keys), [(m.function, m.name)])
+
+        merged, pct = KLL.kll_reagg(m.function, m.name), KLL.kll_percentile
+    return m, build, lambda q: pct(m.function, merged, q)
 
 
 def _plan_topn_route(
@@ -1301,24 +1344,43 @@ def execute_route(
         result = df.select(*out_cols)
     else:
         agg_cols: list[Column] = []
-        bitmap_items: list[tuple] = []  # (SelectItem, bitmap measure name)
-        # (SelectItem, measure, cond_sql) / (SelectItem, measure, fcol, vals)
-        cond_items: list[tuple] = []
-        intersect_items: list[tuple] = []
-        value_items: list[tuple] = []
+        # exact bag-served outputs, each counted per grouping set on that
+        # set's keys by its own explode -> bit_or-per-word -> bit_count
+        # pipeline: (output name, counts(keys) -> frame, value of a group
+        # with no bag — an all-NULL group counts 0, an empty INTERSECT_VALUE
+        # renders "" per valueResult's empty-result contract)
+        distinct_bags: list[tuple] = []
+        cond_bags: list[tuple] = []
+        intersect_bags: list[tuple] = []
+        value_bags: list[tuple] = []
         for item in digest.select:
             if item.group_col is not None or item.grouping_of is not None:
                 continue
             agg = item.agg
             if item.name in route.bitmap_cond:
+                # cohort-filtered bags: cond references layout/derived columns
                 mname, cond = route.bitmap_cond[item.name]
-                cond_items.append((item, mname, cond))
+                cdf = df.filter(F.expr(cond))
+                counts = partial(GD.bitmap_count, cdf, name=mname, alias=item.name)
+                cond_bags.append((item.name, counts, 0))
             elif item.name in route.bitmap_intersect:
                 mname, fcol, vals = route.bitmap_intersect[item.name]
-                intersect_items.append((item, mname, fcol, vals))
+                counts = partial(
+                    GD.bitmap_intersect_count, df, name=mname, filter_col=fcol,
+                    values_sql=list(vals), alias=item.name,
+                )
+                intersect_bags.append((item.name, counts, 0))
             elif item.name in route.bitmap_intersect_value:
+                # surviving bits decode back to values through the global
+                # dictionary the bitmap measure was encoded with
                 mname, fcol, vals = route.bitmap_intersect_value[item.name]
-                value_items.append((item, mname, fcol, vals))
+                m = next(m for m in inst.desc.measures if m.name == mname)
+                counts = partial(
+                    GD.bitmap_intersect_value, df, name=mname, filter_col=fcol,
+                    values_sql=list(vals), alias=item.name,
+                    dictionary=inst.dict_df(spark, m.function.parameter),
+                )
+                value_bags.append((item.name, counts, ""))
             elif agg.distinct:
                 if agg.columns:
                     # multi-column distinct over layout rows (SQL semantics:
@@ -1330,9 +1392,9 @@ def execute_route(
                         ).alias(item.name)
                     )
                 elif item.name in route.bitmap_distinct:
-                    # exact count from the stored word-bag bitmap: needs its
-                    # own explode->bit_or pipeline, joined back post-agg
-                    bitmap_items.append((item, route.bitmap_distinct[item.name]))
+                    mname = route.bitmap_distinct[item.name]
+                    counts = partial(GD.bitmap_count, df, name=mname, alias=item.name)
+                    distinct_bags.append((item.name, counts, 0))
                 elif item.name in route.approx_distinct:
                     agg_cols.append(
                         F.hll_sketch_estimate(
@@ -1342,22 +1404,8 @@ def execute_route(
                 else:
                     agg_cols.append(F.countDistinct(agg.column).alias(item.name))
             elif agg.func == "PERCENTILE":
-                from kylin_on_parquet_v2_spark.cube import measures as M
-
-                m = _hist_measure_for(agg.column, inst)
-                if m is not None:
-                    merged = M.hist_reagg(m.function, m.name)
-                    agg_cols.append(
-                        M.hist_percentile(m.function, merged, agg.q).alias(item.name)
-                    )
-                else:
-                    from kylin_on_parquet_v2_spark.cube import kll as KLL
-
-                    m = _kll_measure_for(agg.column, inst)
-                    merged = KLL.kll_reagg(m.function, m.name)
-                    agg_cols.append(
-                        KLL.kll_percentile(m.function, merged, agg.q).alias(item.name)
-                    )
+                _, _, quantile = percentile_sketch(agg.column, inst)
+                agg_cols.append(quantile(agg.q).alias(item.name))
             elif agg.func == "AVG":
                 s = _measure_for(AggCall("SUM", agg.column, False, "", agg.expr_sql), inst)
                 c = _measure_for(AggCall("COUNT", agg.column, False, "", agg.expr_sql), inst)
@@ -1369,185 +1417,90 @@ def execute_route(
                 agg_cols.append(fn(route.dim_served[item.name]).alias(item.name))
             else:
                 m = _measure_for(agg, inst)
-                fn = {"COUNT": F.sum, "SUM": F.sum, "MIN": F.min, "MAX": F.max}[agg.func]
-                col = fn(m.name)
+                col = MERGE[agg.func](m.name)
                 if agg.func == "COUNT":
                     col = col.cast("long")  # COUNT re-agg is SUM of stored counts
                 agg_cols.append(col.alias(item.name))
-        from kylin_on_parquet_v2_spark.cube import dictionary as GD
-        from kylin_on_parquet_v2_spark.cube.build import join_null_safe
+        bag_counts = distinct_bags + cond_bags + intersect_bags + value_bags
 
-        def _dict_for(mname: str):
-            """The global dictionary the named bitmap measure was encoded
-            through — INTERSECT_VALUE decodes surviving bits back to values."""
-            m = next(m for m in inst.desc.measures if m.name == mname)
-            return inst.dict_df(df.sparkSession, m.function.parameter)
-
-        if digest.grouping_sets is not None:
-            # ROLLUP/CUBE/GROUPING SETS: one cuboid aggregation per grouping
-            # set, unioned back with typed NULLs for the aggregated-away
-            # columns (AggregateMultipleExpandRule.java:45-120 parity). Every
-            # branch re-aggregates the SAME layout scan; Spark caches the
-            # shuffle exchange across the union branches. Bitmap distincts
-            # re-count the word bags per set (bit_or idempotence keeps the
-            # coarser re-OR exact).
-            types = dict(df.dtypes)
-            branches = []
-            for gset in digest.grouping_sets:
-                if agg_cols:
-                    grouped = df.groupBy(*gset) if gset else df.groupBy()
-                    branch = grouped.agg(*agg_cols)
-                elif gset:
-                    branch = df.select(*gset).dropDuplicates()
-                else:
-                    branch = None  # grand-total set with only bag-served aggs
-                per_set = [
-                    (item, GD.bitmap_count(df, list(gset), mname, item.name))
-                    for item, mname in bitmap_items
-                ]
-                per_set += [
-                    (
-                        item,
-                        GD.bitmap_count(
-                            df.filter(F.expr(cond)), list(gset), mname, item.name
-                        ),
-                    )
-                    for item, mname, cond in cond_items
-                ]
-                per_set += [
-                    (
-                        item,
-                        GD.bitmap_intersect_count(
-                            df, list(gset), mname, fcol, list(vals), item.name
-                        ),
-                    )
-                    for item, mname, fcol, vals in intersect_items
-                ]
-                for item, counts in per_set:
-                    if branch is None:
-                        branch = counts
-                    else:
-                        branch = join_null_safe(branch, counts, list(gset), "left")
-                    branch = branch.withColumn(
-                        item.name, F.coalesce(F.col(item.name), F.lit(0)).cast("long")
-                    )
-                # INTERSECT_VALUE per set: same re-OR/bit_and soundness
-                # argument; an empty intersection has no decoded row ->
-                # coalesce to "" (valueResult's empty-result contract)
-                for item, mname, fcol, vals in value_items:
-                    vals_df = GD.bitmap_intersect_value(
-                        df, list(gset), mname, fcol, list(vals), item.name,
-                        _dict_for(mname),
-                    )
-                    if branch is None:
-                        branch = vals_df
-                    else:
-                        branch = join_null_safe(branch, vals_df, list(gset), "left")
-                    branch = branch.withColumn(
-                        item.name, F.coalesce(F.col(item.name), F.lit(""))
-                    )
-                sel = []
-                for item in digest.select:
-                    if item.group_col is not None:
-                        if item.group_col in gset:
-                            sel.append(F.col(item.group_col).alias(item.name))
-                        else:
-                            sel.append(
-                                F.lit(None).cast(types[item.group_col]).alias(item.name)
-                            )
-                    elif item.grouping_of is not None:
-                        # GROUPING(col) is a per-set LITERAL: 0 when the col
-                        # is grouped in this set, 1 when aggregated away
-                        # (AggregatePlan.scala:169-174 parity)
-                        sel.append(
-                            F.lit(0 if item.grouping_of in gset else 1)
-                            .cast("tinyint")
-                            .alias(item.name)
-                        )
-                    else:
-                        sel.append(F.col(item.name))
-                branches.append(branch.select(*sel))
-            result = branches[0]
-            for b in branches[1:]:
-                result = result.unionAll(b)
-        elif agg_cols:
-            grouped = df.groupBy(*digest.group_cols) if digest.group_cols else df.groupBy()
-            result = grouped.agg(*agg_cols)
-        elif (
-            bitmap_items or cond_items or intersect_items or value_items
-        ) and not digest.group_cols:
-            result = None  # global query whose only aggs are bag-served
-        else:
-            # SELECT DISTINCT / group-cols-only output: GroupedData.agg()
-            # rejects an empty list — dedup over the full grouping set
-            # instead (still honors group cols absent from the select list).
-            result = df.select(*digest.group_cols).dropDuplicates()
-        # Exact bitmap distincts: one explode -> bit_or-per-word -> bit_count
-        # pipeline per item, joined back on the group keys (a group whose
-        # values were all NULL has an empty bag => coalesce to 0, matching
-        # COUNT DISTINCT semantics). Grouping-set queries already counted
-        # per set above.
-        if digest.grouping_sets is None:
-            bitmap_pipelines: list[tuple] = [
-                (item, GD.bitmap_count(df, digest.group_cols, mname, item.name))
-                for item, mname in bitmap_items
-            ]
-            bitmap_pipelines += [
-                # cohort-filtered bags: cond references layout/derived columns
-                (
-                    item,
-                    GD.bitmap_count(
-                        df.filter(F.expr(cond)), digest.group_cols, mname, item.name
-                    ),
-                )
-                for item, mname, cond in cond_items
-            ]
-            bitmap_pipelines += [
-                (
-                    item,
-                    GD.bitmap_intersect_count(
-                        df, digest.group_cols, mname, fcol, list(vals), item.name
-                    ),
-                )
-                for item, mname, fcol, vals in intersect_items
-            ]
-            for item, counts in bitmap_pipelines:
-                if result is None:
-                    result = counts
-                else:
-                    # NULL-safe: a NULL-keyed group must recover its count
-                    result = join_null_safe(result, counts, digest.group_cols, "left")
-                result = result.withColumn(
-                    item.name, F.coalesce(F.col(item.name), F.lit(0)).cast("long")
-                )
-            for item, mname, fcol, vals in value_items:
-                vals_df = GD.bitmap_intersect_value(
-                    df, digest.group_cols, mname, fcol, list(vals), item.name,
-                    _dict_for(mname),
-                )
-                if result is None:
-                    result = vals_df
-                else:
-                    result = join_null_safe(result, vals_df, digest.group_cols, "left")
-                result = result.withColumn(
-                    item.name, F.coalesce(F.col(item.name), F.lit(""))
-                )
-        # Project by source group column, aliasing to the query's output name
-        # (a bare item.name lookup breaks on `SELECT col AS c ... GROUP BY col`).
-        # Grouping-set branches already projected output names per set —
-        # `SELECT d AS x ... GROUP BY ROLLUP(d)` has column `x`, not `d` —
-        # so re-projecting by source name there would raise AnalysisException.
-        if digest.grouping_sets is None:
-            result = result.select(
-                *[
-                    F.col(item.group_col).alias(item.name)
-                    if item.group_col is not None
-                    else F.col(item.name)
-                    for item in digest.select
-                ]
-            )
+        # One aggregation per grouping set, unioned back (a plain GROUP BY
+        # is the one-set case): AggregateMultipleExpandRule.java:45-120
+        # parity. Every set re-aggregates the SAME layout scan, so Spark
+        # shares its exchange across the union branches, and bag counts
+        # re-OR per set (bit_or idempotence keeps a coarser set exact).
+        sets = (
+            digest.grouping_sets
+            if digest.grouping_sets is not None
+            else [digest.group_cols]
+        )
+        types: dict = {}
+        branches = []
+        for gset in sets:
+            keys = list(gset)
+            if agg_cols:
+                branch = df.groupBy(*keys).agg(*agg_cols)
+            elif keys or not bag_counts:
+                # SELECT DISTINCT / group-cols-only output: GroupedData.agg()
+                # rejects an empty list — dedup over the set's keys instead
+                # (still honors group cols absent from the select list)
+                branch = df.select(*keys).dropDuplicates()
+            else:
+                branch = None  # global set whose only aggs are bag-served
+            for name, counts, empty in bag_counts:
+                branch = join_counts(branch, counts(keys), keys, name, empty)
+            branches.append(branch.select(*set_projection(digest, gset, df, types)))
+        result = branches[0]
+        for b in branches[1:]:
+            result = result.unionAll(b)
 
     return apply_post_aggregation(digest, result)
+
+
+def join_counts(branch, counts: DataFrame, keys: list, name: str, empty) -> DataFrame:
+    """Attach one per-set count frame to the set's branch: a NULL-safe left
+    join on the set's keys (a NULL-keyed group must recover its count), or
+    the counts themselves when the set has no other aggregate yet. A group
+    the counts miss takes ``empty`` (0 as a long, or ""); ``empty=None``
+    keeps it NULL, like a percentile over zero rows."""
+    if branch is None:
+        branch = counts
+    else:
+        branch = join_null_safe(branch, counts, keys, "left")
+    if empty is None:
+        return branch
+    filled = F.coalesce(F.col(name), F.lit(empty))
+    return branch.withColumn(name, filled.cast("long") if empty == 0 else filled)
+
+
+def set_projection(
+    digest: SqlDigest, gset, scan: DataFrame, types: dict, avg_parts=None
+) -> list[Column]:
+    """Output columns of one grouping set's branch, in select order and
+    under the query's output names (a bare item.name lookup breaks on
+    ``SELECT col AS c ... GROUP BY col``). A group column the set
+    aggregates away becomes a NULL of its scanned type, read from ``scan``
+    into the caller's ``types`` memo only when some set first needs it (a
+    plain GROUP BY never does); GROUPING(col) is a per-set literal, 0 when
+    grouped and 1 when aggregated away (AggregatePlan.scala:169-174).
+    ``avg_parts`` maps an AVG output to the merged SUM/COUNT partial columns
+    it divides."""
+    out = []
+    for item in digest.select:
+        if item.group_col is not None and item.group_col in gset:
+            out.append(F.col(item.group_col).alias(item.name))
+        elif item.group_col is not None:
+            if not types:
+                types.update(scan.dtypes)
+            out.append(F.lit(None).cast(types[item.group_col]).alias(item.name))
+        elif item.grouping_of is not None:
+            grouped = 0 if item.grouping_of in gset else 1
+            out.append(F.lit(grouped).cast("tinyint").alias(item.name))
+        elif avg_parts and item.name in avg_parts:
+            sa, ca = avg_parts[item.name]
+            out.append((F.col(sa) / F.col(ca)).alias(item.name))
+        else:
+            out.append(F.col(item.name))
+    return out
 
 
 def apply_post_aggregation(digest: SqlDigest, result: DataFrame) -> DataFrame:

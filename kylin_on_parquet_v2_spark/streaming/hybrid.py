@@ -41,13 +41,17 @@ hllc approx-distinct serves across the split too (engine approx_distinct
 opt-in): HLL register-max union is idempotent like bit_or, so stored batch
 sketches union with sketches built over the tail. Derived dimensions
 recover on the tail via the same broadcast snapshot join the batch scan
-uses (the store carries the host FKs). GROUPING SETS/ROLLUP/CUBE merge
-once at the finest grain and derive every set from the merged partials
-(see :func:`_hybrid_grouping_sets`).
+uses (the store carries the host FKs).
 
 Percentile serves across the split too: the stored sketch state (fixed-bin
 histogram / KLL weighted sample) is additive, and the split is disjoint, so
-batch + tail sketches merge exactly (:func:`_pct_counts`).
+batch + tail sketches merge exactly — one merged sketch per column, however
+many quantiles the query reads from it.
+
+:func:`execute_hybrid` has ONE aggregation tail: batch and tail merge once
+at the finest grain, and every grouping set — a plain GROUP BY is the
+one-set case — is derived from that merged state (ROLLUP/CUBE/GROUPING SETS
+re-merge it per set; idempotent or additive merges keep each set exact).
 
 Stored TopN serves through the merge as well: batch lists explode into
 per-key partial sums, the tail adds exact per-key sums, and the ORDER
@@ -64,17 +68,25 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kylin_on_parquet_v2_spark import fs as FS
+from kylin_on_parquet_v2_spark.cube import dictionary as GD
 from kylin_on_parquet_v2_spark.cube.build import SEGMENT_COL, CubeInstance
 from kylin_on_parquet_v2_spark.query.digest import SqlDigest
 from kylin_on_parquet_v2_spark.query.router import (
+    MERGE,
     Route,
+    apply_derived_joins,
     apply_post_aggregation,
     execute_route,
+    join_counts,
+    percentile_sketch,
+    routed_layout_scan,
+    set_projection,
 )
 from kylin_on_parquet_v2_spark.streaming.segments import _normalize_ts
 
@@ -94,12 +106,6 @@ class HybridPart:
                 spark.read.parquet(self.realtime_dir).columns
             )
         return self._columns
-
-
-#: merge function per SQL aggregate — COUNT partials merge by SUM
-#: (CuboidAggregator.scala:86-91 applies the same COUNT->SUM rule when
-#: re-aggregating a child layout from a parent)
-_MERGE = {"COUNT": F.sum, "SUM": F.sum, "MIN": F.min, "MAX": F.max}
 
 
 def _dim_distinct_cols(a, route: Route) -> list | None:
@@ -167,7 +173,7 @@ def hybrid_servable(digest: SqlDigest, route: Route) -> bool:
             # samples are ADDITIVE, and the boundary split is disjoint, so
             # batch + tail sketches merge exactly
             continue
-        if a.distinct or (a.func not in _MERGE and a.func != "AVG"):
+        if a.distinct or (a.func not in MERGE and a.func != "AVG"):
             return False
     # (hidden HAVING aggregates need no special case: they are SelectItems
     # in digest.select, so they flow through the partial pipelines like any
@@ -183,7 +189,7 @@ def hybrid_columns_ok(
     inst: CubeInstance,
     part: HybridPart,
     spark: SparkSession,
-    route: Route | None = None,
+    route: Route,
 ) -> bool:
     """The realtime store must carry every column the tail aggregation
     reads (group bases, filter columns, agg inputs — including the raw
@@ -201,10 +207,9 @@ def hybrid_columns_ok(
         # stores up front; this guards stores mutated after registration.
         return False
     need = set(digest.needed_cols())
-    if route is not None and route.derived:
-        for lk in route.derived:
-            need = {c for c in need if inst.column_tables.get(c) != lk.name}
-            need |= set(lk.join.foreign_key)
+    for lk in route.derived:
+        need = {c for c in need if inst.column_tables.get(c) != lk.name}
+        need |= set(lk.join.foreign_key)
     model_cols = set(inst.column_tables)
     for a in digest.aggs:
         if a.column is not None:
@@ -300,8 +305,6 @@ def fold_tail_dictionary(
     landing mid-fold contributes values (harmless — the dictionary is
     append-only) but its file is NOT recorded as covered, so the next
     query extends over it normally. Returns {param: new ids appended}."""
-    from kylin_on_parquet_v2_spark.cube import dictionary as GD
-
     bitmap_params = [
         m.function.parameter
         for m in inst.desc.measures
@@ -342,8 +345,7 @@ def _encode_tail(
     inst: CubeInstance,
     param: str,
     spark: SparkSession,
-    part: HybridPart | None = None,
-    covered: bool | None = None,
+    covered: bool,
 ) -> DataFrame:
     """Dictionary-encode the realtime tail through an in-memory EXTENSION of
     the cube's frozen global dictionary: values the batch build already saw
@@ -360,15 +362,11 @@ def _encode_tail(
     the EXTENDED mapping to decode bits back to values (a tail-only value's
     id exists nowhere in the persisted dictionary).
 
-    ``covered`` short-circuits the coverage check: callers that encode
-    several params in one query compute :func:`_tail_covered` ONCE (the
-    check walks the realtime store's file listing driver-side — per-query
-    cost must not scale with the number of bitmap params; r11 advisor)."""
-    from kylin_on_parquet_v2_spark.cube import dictionary as GD
-
+    ``covered`` is the caller's :func:`_tail_covered` answer, computed ONCE
+    per query however many params it encodes (the check walks the realtime
+    store's file listing driver-side — per-query cost must not scale with
+    the number of bitmap params; r11 advisor)."""
     base = inst.dict_df(spark, param)
-    if covered is None:
-        covered = part is not None and _tail_covered(inst, part, spark)
     if covered:
         return GD.encode_column(rt, base, param), base
     ext = GD.extend_global_dict(base, rt, param)
@@ -385,58 +383,24 @@ def execute_hybrid(
     """Serve ``digest`` as batch-cuboid partials UNION realtime-tail
     partials, re-merged, then the ordinary post-aggregation tail.
 
-    Additive measures merge by their merge function; AVG by SUM/COUNT
-    decomposition; mergeable-distinct outputs (word-bag bitmap /
-    conditional bitmap / INTERSECT_COUNT) by re-ORing batch bags with bags
-    built over the dictionary-encoded tail at the query grain."""
+    Batch and tail merge ONCE at the finest grain (every group column), and
+    each grouping set is derived from that merged state; a plain GROUP BY is
+    the one-set case and takes the merged frame as it is. Additive partials
+    re-aggregate exactly (SUM of SUMs, COUNT partials by SUM, MIN of MINs,
+    MAX of MAXs); AVG decomposes into SUM/COUNT partials and divides once
+    above the merge. Mergeable state stays UN-finalized at the finest grain,
+    and each set re-counts it at its own grain: word bags (distinct,
+    conditional distinct, INTERSECT_COUNT/VALUE) by ``bit_or`` and HLL
+    sketches by register-max — both idempotent — percentile sketches by
+    their additive merge, and dimension tuples by set union. GROUPING()
+    indicators are per-set literals; aggregated-away columns null-pad with
+    their scanned types (AggregateMultipleExpandRule.java:45-120 parity)."""
     import copy
 
-    from kylin_on_parquet_v2_spark.cube import dictionary as GD
-    from kylin_on_parquet_v2_spark.cube.build import join_null_safe
+    from kylin_on_parquet_v2_spark.cube.measures import _hll_lgk
     from kylin_on_parquet_v2_spark.query.digest import AggCall, SelectItem
-    from kylin_on_parquet_v2_spark.query.router import routed_layout_scan
 
-    # partials must come back WITHOUT having/sort/limit/window post-processing
-    # (those apply once, above the merge). AVG outputs decompose into
-    # SUM/COUNT partial columns here; the division is applied once above the
-    # merge. Bag-served distinct outputs leave the plain-partial pipeline
-    # entirely — they merge through their own bag pipelines below.
-    core = copy.copy(digest)
-    core.sort, core.limit = [], None
-    core.having_sql, core.having_cols = None, set()
-    core.window_exprs, core.window_projects = [], []
-    core.hidden = []
-    core.select = []
-    avg_parts: dict[str, tuple[str, str]] = {}
-    bag_items: list[SelectItem] = []
-    pct_items: list[SelectItem] = []
-    dd_items: list[SelectItem] = []  # dim-served COUNT DISTINCT
-    for item in digest.select:
-        if item.agg is not None and _bag_served(item.name, route):
-            bag_items.append(item)
-        elif (
-            item.agg is not None
-            and item.agg.distinct
-            and _dim_distinct_cols(item.agg, route) is not None
-        ):
-            dd_items.append(item)
-        elif item.agg is not None and item.agg.func == "PERCENTILE":
-            pct_items.append(item)
-        elif item.agg is not None and item.agg.func == "AVG":
-            i = len(avg_parts)
-            sa, ca = f"__avs{i}", f"__avc{i}"
-            avg_parts[item.name] = (sa, ca)
-            a = item.agg
-            core.select.append(
-                SelectItem(name=sa, agg=AggCall("SUM", a.column, False, sa, a.expr_sql))
-            )
-            core.select.append(
-                SelectItem(name=ca, agg=AggCall("COUNT", a.column, False, ca, a.expr_sql))
-            )
-        else:
-            core.select.append(item)
-    plain_aggs = [s for s in core.select if s.agg is not None]
-
+    G = list(digest.group_cols)
     rt = spark.read.parquet(part.realtime_dir)
     rt = _normalize_ts(rt, part.ts_col)
     boundary = batch_boundary(inst, spark)
@@ -457,24 +421,14 @@ def execute_hybrid(
     # derived-dimension recovery on the tail BEFORE the query filter: the
     # filter/grouping may reference lookup columns the raw store lacks —
     # the same broadcast snapshot join the batch scan applies
-    from kylin_on_parquet_v2_spark.query.router import apply_derived_joins
-
     rt = apply_derived_joins(rt, route, inst, spark)
     if digest.filter_sql:
         rt = rt.filter(F.expr(digest.filter_sql))
     for gname, (gsql, _bases) in digest.group_exprs.items():
         rt = rt.withColumn(gname, F.expr(gsql))
 
-    group_srcs = list(digest.group_cols)
-    group_out = [s.name for s in digest.select if s.group_col is not None]
-    src_to_out = {
-        s.group_col: s.name for s in digest.select if s.group_col is not None
-    }
-
-    result = None
     # one routed scan (pruned layout + derived recovery + filters + group
-    # exprs) shared by the plain-partial path AND every bag pipeline —
-    # core's digest differs from the original only above the scan
+    # exprs) shared by the plain-partial path AND every state pipeline
     batch_scan = routed_layout_scan(digest, inst, route, spark)
     if route.topn is not None:
         # stored-TopN across the split: batch lists explode into
@@ -509,540 +463,185 @@ def execute_hybrid(
             ]
         )
         return apply_post_aggregation(digest, result)
-    if digest.grouping_sets is not None:
-        return _hybrid_grouping_sets(
-            digest, inst, route, spark, rt, batch_scan, bag_items, part
-        )
-    if plain_aggs:
-        batch = execute_route(core, inst, route, spark, scan=batch_scan)
-        key_cols, agg_cols, merge_aggs = [], [], []
-        for item in core.select:
-            if item.group_col is not None:
-                key_cols.append(F.col(item.group_col).alias(item.name))
-                continue
-            a = item.agg
-            src = F.expr(a.expr_sql) if a.expr_sql is not None else (
-                F.lit(1) if a.column is None else F.col(a.column)
-            )
-            fn = {"COUNT": F.count, "SUM": F.sum, "MIN": F.min, "MAX": F.max}[a.func]
-            agg_cols.append(fn(src).alias(item.name))
-            merged = _MERGE[a.func](item.name)
-            if a.func == "COUNT":
-                merged = merged.cast("long")
-            merge_aggs.append(merged.alias(item.name))
-        # realtime partial aggregation at the SAME grain as the batch partials
-        rt_part = rt.groupBy(*key_cols).agg(*agg_cols) if key_cols else rt.groupBy().agg(*agg_cols)
-        # align realtime partial types to the batch side before the union
-        rt_part = rt_part.select(
-            *[
-                F.col(c).cast(batch.schema[c].dataType).alias(c)
-                for c in batch.columns
-            ]
-        )
-        merged = batch.unionByName(rt_part)
-        if group_out:
-            result = merged.groupBy(*group_out).agg(*merge_aggs)
-        else:
-            result = merged.groupBy().agg(*merge_aggs)
 
-    if bag_items or pct_items or dd_items:
-        # bags merge batch∪tail at the query grain, then finalize exactly
-        # as the plain routed path does (explode → bit_or → bit_count);
-        # per-param tail encodings are computed once even when several
-        # outputs share the same distinct column; the fold-coverage check
-        # (a driver-side store listing) runs AT MOST once per QUERY, and
-        # only if some item actually encodes the tail (hll/percentile/
-        # dim-distinct items never do — they must not pay the listing)
-        measures = {m.name: m for m in inst.desc.measures}
-        enc_cache: dict[str, tuple] = {}
-        _cov_memo: list = []
-
-        def tail_cov() -> bool:
-            if not _cov_memo:
-                _cov_memo.append(_tail_covered(inst, part, spark))
-            return _cov_memo[0]
-        if result is None and group_srcs:
-            # no plain aggregates: the group universe still must include
-            # groups whose distinct column is entirely NULL (count = 0)
-            result = (
-                batch_scan.select(*group_srcs)
-                .unionByName(rt.select(*group_srcs))
-                .dropDuplicates()
-                .select(
-                    *[F.col(c).alias(src_to_out[c]) for c in group_srcs]
-                )
-            )
-        for item in bag_items:
-            name = item.name
-            if name in route.approx_distinct:
-                # hllc across the split: stored batch sketches UNION
-                # sketches built over the tail at the query grain — HLL
-                # union is register-max, idempotent, so overlap is safe
-                from kylin_on_parquet_v2_spark.cube.measures import _hll_lgk
-
-                mname = route.approx_distinct[name]
-                param = measures[mname].function.parameter
-                tail_sk = (
-                    rt.groupBy(*group_srcs) if group_srcs else rt.groupBy()
-                ).agg(
-                    F.hll_sketch_agg(
-                        F.col(param), F.lit(_hll_lgk(measures[mname].function))
-                    ).alias(mname)
-                )
-                sketches = batch_scan.select(*group_srcs, mname).unionByName(tail_sk)
-                grouped = (
-                    sketches.groupBy(*group_srcs) if group_srcs else sketches.groupBy()
-                )
-                counts = grouped.agg(
-                    F.hll_sketch_estimate(F.hll_union_agg(mname)).alias(name)
-                )
-                counts = counts.select(
-                    *[F.col(c).alias(src_to_out[c]) for c in group_srcs], name
-                )
-                if result is None:
-                    result = counts
-                else:
-                    result = join_null_safe(result, counts, group_out, "left")
-                result = result.withColumn(
-                    name, F.coalesce(F.col(name), F.lit(0)).cast("long")
-                )
-                continue
-            cond = None
-            value_decode = False
-            if name in route.bitmap_distinct:
-                mname = route.bitmap_distinct[name]
-                grain = group_srcs
-            elif name in route.bitmap_cond:
-                mname, cond = route.bitmap_cond[name]
-                grain = group_srcs
-            else:
-                if name in route.bitmap_intersect:
-                    mname, fcol, vals = route.bitmap_intersect[name]
-                else:
-                    # INTERSECT_VALUE: same bag merge across the split,
-                    # decoded through the EXTENDED dictionary at the end
-                    mname, fcol, vals = route.bitmap_intersect_value[name]
-                    value_decode = True
-                # the cohort column may itself be a group key — dedupe
-                grain = group_srcs + ([fcol] if fcol not in group_srcs else [])
-            param = measures[mname].function.parameter
-            cached = enc_cache.get(param)
-            if cached is None:
-                # encode the UNFILTERED tail once per param; cohort filters
-                # commute with the encoding join, so cond items filter the
-                # encoded frame instead of re-running the dict extension
-                cached = _encode_tail(rt, inst, param, spark, part, tail_cov())
-                enc_cache[param] = cached
-            tail_enc, ext_dict = cached
-            b_side = batch_scan if cond is None else batch_scan.filter(F.expr(cond))
-            t_side = tail_enc if cond is None else tail_enc.filter(F.expr(cond))
-            tail_bags = GD.bitmap_build_agg(
-                t_side, grain, GD.dict_col(param), mname
-            )
-            bags = b_side.select(*grain, mname).unionByName(tail_bags)
-            if value_decode:
-                counts = GD.bitmap_intersect_value(
-                    bags, group_srcs, mname, fcol, list(vals), name, ext_dict
-                )
-            elif name in route.bitmap_intersect:
-                counts = GD.bitmap_intersect_count(
-                    bags, group_srcs, mname, fcol, list(vals), name
-                )
-            else:
-                counts = GD.bitmap_count(bags, group_srcs, mname, name)
-            counts = counts.select(
-                *[F.col(c).alias(src_to_out[c]) for c in group_srcs], name
-            )
-            if result is None:
-                result = counts  # global query: single-row count frame
-            else:
-                result = join_null_safe(result, counts, group_out, "left")
-            if value_decode:
-                result = result.withColumn(
-                    name, F.coalesce(F.col(name), F.lit(""))
-                )
-            else:
-                result = result.withColumn(
-                    name, F.coalesce(F.col(name), F.lit(0)).cast("long")
-                )
-        # one merged sketch per COLUMN, all its percentile outputs extracted
-        # in the same aggregate (r14 — the r13 percentile_exact lesson
-        # applied across the split: p50/p95 over one column previously each
-        # built the tail sketch, merged batch∪tail, and joined separately)
-        pct_by_col: dict = {}
-        for item in pct_items:
-            pct_by_col.setdefault(item.agg.column, []).append(item)
-        for items in pct_by_col.values():
-            counts = _pct_counts(items, inst, rt, batch_scan, group_srcs, spark)
-            counts = counts.select(
-                *[F.col(c).alias(src_to_out[c]) for c in group_srcs],
-                *[it.name for it in items],
-            )
-            if result is None:
-                result = counts
-            else:
-                # NO coalesce: the percentile of a group with no values is
-                # NULL, exactly like percentile_approx over zero rows
-                result = join_null_safe(result, counts, group_out, "left")
-        for item in dd_items:
-            # dims survive in the layout: set-union the layout's distinct
-            # dim tuples with the tail's rows, count once (DimCountDistinct
-            # across the split — set union is idempotent by definition)
-            cols = _dim_distinct_cols(item.agg, route)
-            extra = [c for c in cols if c not in group_srcs]
-            frame = batch_scan.select(*group_srcs, *extra).unionByName(
-                rt.select(*group_srcs, *extra)
-            )
-            counts = (
-                frame.groupBy(*group_srcs) if group_srcs else frame.groupBy()
-            ).agg(F.count_distinct(*[F.col(c) for c in cols]).alias(item.name))
-            counts = counts.select(
-                *[F.col(c).alias(src_to_out[c]) for c in group_srcs], item.name
-            )
-            if result is None:
-                result = counts
-            else:
-                result = join_null_safe(result, counts, group_out, "left")
-            result = result.withColumn(
-                item.name, F.coalesce(F.col(item.name), F.lit(0)).cast("long")
-            )
-
-    # final projection in the ORIGINAL select order, re-assembling AVG from
-    # its merged SUM/COUNT partials
-    out_cols = []
-    for item in digest.select:
-        if item.name in avg_parts:
-            sa, ca = avg_parts[item.name]
-            out_cols.append((F.col(sa) / F.col(ca)).alias(item.name))
-        else:
-            out_cols.append(F.col(item.name))
-    result = result.select(*out_cols)
-    return apply_post_aggregation(digest, result)
-
-
-def _hybrid_grouping_sets(
-    digest: SqlDigest,
-    inst: CubeInstance,
-    route: Route,
-    spark: SparkSession,
-    rt: DataFrame,
-    batch_scan: DataFrame,
-    bag_items: list,
-    part: HybridPart | None = None,
-) -> DataFrame:
-    """GROUPING SETS / ROLLUP / CUBE across the hybrid split.
-
-    Strategy: merge batch∪tail PARTIALS once at the FINEST grain (the
-    union of all set columns), then derive every grouping set from that
-    merged frame — additive partials re-aggregate exactly (SUM of SUMs,
-    COUNT partials by SUM, MIN/MIN, MAX/MAX), and mergeable-distinct
-    state (word bags / HLL sketches) is kept UN-finalized at the finest
-    grain so each set re-counts it at its own granularity (bit_or and
-    register-max are idempotent, so the coarser re-merge stays exact —
-    the same argument the batch-only routed grouping sets rely on, now
-    applied to the batch∪tail union). GROUPING() indicators are per-set
-    literals; aggregated-away columns null-pad with their scanned types
-    (AggregateMultipleExpandRule.java:45-120 parity)."""
-    import copy
-
-    from kylin_on_parquet_v2_spark.cube import dictionary as GD
-    from kylin_on_parquet_v2_spark.cube.build import join_null_safe
-    from kylin_on_parquet_v2_spark.cube.measures import _hll_lgk
-    from kylin_on_parquet_v2_spark.query.digest import AggCall, SelectItem
-    from kylin_on_parquet_v2_spark.query.router import execute_route
-
-    G = list(digest.group_cols)
-    measures = {m.name: m for m in inst.desc.measures}
-
-    # finest-grain core: all group cols as passthroughs + plain partials
+    # finest-grain core: every group column as a passthrough plus the plain
+    # partials, WITHOUT having/sort/limit/window post-processing (those
+    # apply once, above the merge). AVG outputs decompose into SUM/COUNT
+    # partial columns; state-served outputs leave the plain partials
+    # entirely — they merge through their own pipelines below.
     core = copy.copy(digest)
     core.grouping_sets = None
     core.sort, core.limit = [], None
     core.having_sql, core.having_cols = None, set()
     core.window_exprs, core.window_projects = [], []
     core.hidden = []
+    core.select = [SelectItem(name=c, group_col=c) for c in G]
     avg_parts: dict[str, tuple[str, str]] = {}
-    sel = [SelectItem(name=c, group_col=c) for c in G]
-    plain_items: list[tuple[str, str]] = []  # (column name, partial func)
-    pct_gs: list[SelectItem] = []
-    dd_gs: list[SelectItem] = []
+    bag_items: list[SelectItem] = []
+    pct_by_col: dict[str, list[SelectItem]] = {}
+    dd_items: list[SelectItem] = []  # dim-served COUNT DISTINCT
     for item in digest.select:
-        if item.group_col is not None or item.grouping_of is not None:
-            continue
-        if _bag_served(item.name, route):
-            continue
         a = item.agg
-        if a.distinct and _dim_distinct_cols(a, route) is not None:
-            dd_gs.append(item)
+        if a is None:
+            continue  # group columns and GROUPING() indicators
+        if _bag_served(item.name, route):
+            bag_items.append(item)
+        elif a.distinct and _dim_distinct_cols(a, route) is not None:
+            dd_items.append(item)
         elif a.func == "PERCENTILE":
-            pct_gs.append(item)
+            pct_by_col.setdefault(a.column, []).append(item)
         elif a.func == "AVG":
             i = len(avg_parts)
             sa, ca = f"__avs{i}", f"__avc{i}"
             avg_parts[item.name] = (sa, ca)
-            sel.append(SelectItem(name=sa, agg=AggCall("SUM", a.column, False, sa, a.expr_sql)))
-            sel.append(SelectItem(name=ca, agg=AggCall("COUNT", a.column, False, ca, a.expr_sql)))
-            plain_items += [(sa, "SUM"), (ca, "COUNT")]
+            core.select.append(
+                SelectItem(name=sa, agg=AggCall("SUM", a.column, False, sa, a.expr_sql))
+            )
+            core.select.append(
+                SelectItem(name=ca, agg=AggCall("COUNT", a.column, False, ca, a.expr_sql))
+            )
         else:
-            sel.append(item)
-            plain_items.append((item.name, a.func))
-    core.select = sel
+            core.select.append(item)
+    plain_aggs = core.select[len(G):]
 
-    mgd = None
-    if plain_items:
+    mgd, merge_aggs = None, []
+    if plain_aggs:
         batch = execute_route(core, inst, route, spark, scan=batch_scan)
-        agg_cols, merge_aggs = [], []
-        for item in core.select:
-            if item.group_col is not None:
-                continue
+        part_aggs = []
+        for item in plain_aggs:
             a = item.agg
             src = F.expr(a.expr_sql) if a.expr_sql is not None else (
                 F.lit(1) if a.column is None else F.col(a.column)
             )
             fn = {"COUNT": F.count, "SUM": F.sum, "MIN": F.min, "MAX": F.max}[a.func]
-            agg_cols.append(fn(src).alias(item.name))
-            merged = _MERGE[a.func](item.name)
+            part_aggs.append(fn(src).alias(item.name))
+            merged = MERGE[a.func](item.name)
             if a.func == "COUNT":
                 merged = merged.cast("long")
             merge_aggs.append(merged.alias(item.name))
-        rt_part = (rt.groupBy(*G) if G else rt.groupBy()).agg(*agg_cols)
+        # realtime partial aggregation at the SAME grain as the batch
+        # partials, its types aligned to the batch side before the union
+        rt_part = rt.groupBy(*G).agg(*part_aggs)
         rt_part = rt_part.select(
             *[F.col(c).cast(batch.schema[c].dataType).alias(c) for c in batch.columns]
         )
-        mgd = batch.unionByName(rt_part)
-        mgd = (mgd.groupBy(*G) if G else mgd.groupBy()).agg(*merge_aggs)
-    # group universe (for sets whose branch has no plain-agg frame)
-    universe = (
-        batch_scan.select(*G).unionByName(rt.select(*G)).dropDuplicates()
-        if G
-        else None
-    )
+        mgd = batch.unionByName(rt_part).groupBy(*G).agg(*merge_aggs)
+    elif G:
+        # no plain aggregates: the group universe still must include groups
+        # whose distinct column is entirely NULL (count = 0)
+        mgd = batch_scan.select(*G).unionByName(rt.select(*G)).dropDuplicates()
 
-    # per-item merged-but-unfinalized state frames at the finest grain;
-    # the fold-coverage store listing runs AT MOST once per query, and
-    # only if some item actually encodes the tail
+    # merged-but-unfinalized state per output at the finest grain, each
+    # finalized per grouping set: (output name, counts(keys) -> frame over
+    # that state, value of a group with no state — see join_counts).
+    # Per-param tail encodings are computed once even when several outputs
+    # share a distinct column; the fold-coverage check (a driver-side store
+    # listing) runs AT MOST once per query, and only if some output actually
+    # encodes the tail (hll/percentile/dim-distinct outputs never do)
+    measures = {m.name: m for m in inst.desc.measures}
     enc_cache: dict[str, tuple] = {}
     _cov_memo: list = []
 
     def tail_cov() -> bool:
         if not _cov_memo:
-            _cov_memo.append(part is not None and _tail_covered(inst, part, spark))
+            _cov_memo.append(_tail_covered(inst, part, spark))
         return _cov_memo[0]
 
-    state_frames: list[tuple] = []  # (item, kind, frame, mname, extra)
+    states: list[tuple] = []
     for item in bag_items:
         name = item.name
         if name in route.approx_distinct:
+            # hllc across the split: stored batch sketches UNION sketches
+            # built over the tail — HLL union is register-max, idempotent,
+            # so overlap is safe
             mname = route.approx_distinct[name]
-            param = measures[mname].function.parameter
-            tail_sk = (rt.groupBy(*G) if G else rt.groupBy()).agg(
-                F.hll_sketch_agg(
-                    F.col(param), F.lit(_hll_lgk(measures[mname].function))
-                ).alias(mname)
-            )
+            func = measures[mname].function
+            sketch = F.hll_sketch_agg(F.col(func.parameter), F.lit(_hll_lgk(func)))
+            tail_sk = rt.groupBy(*G).agg(sketch.alias(mname))
             frame = batch_scan.select(*G, mname).unionByName(tail_sk)
-            state_frames.append((item, "hll", frame, mname, None))
+            est = F.hll_sketch_estimate(F.hll_union_agg(mname)).alias(name)
+            states.append((name, partial(_agg_at, frame, aggs=[est]), 0))
             continue
-        cond = None
-        kind = "bag"
+        cond = fcol = None
         if name in route.bitmap_distinct:
             mname = route.bitmap_distinct[name]
-            grain = G
-            extra = None
         elif name in route.bitmap_cond:
             mname, cond = route.bitmap_cond[name]
-            grain = G
-            extra = None
+        elif name in route.bitmap_intersect:
+            mname, fcol, vals = route.bitmap_intersect[name]
         else:
-            if name in route.bitmap_intersect:
-                mname, fcol, vals = route.bitmap_intersect[name]
-                kind = "intersect"
-            else:
-                mname, fcol, vals = route.bitmap_intersect_value[name]
-                kind = "intersect_value"
-            grain = G + ([fcol] if fcol not in G else [])
-            extra = (fcol, list(vals))
+            mname, fcol, vals = route.bitmap_intersect_value[name]
         param = measures[mname].function.parameter
-        cached = enc_cache.get(param)
-        if cached is None:
-            cached = _encode_tail(rt, inst, param, spark, part, tail_cov())
-            enc_cache[param] = cached
-        tail_enc, ext_dict = cached
+        if param not in enc_cache:
+            # encode the UNFILTERED tail once per param; cohort filters
+            # commute with the encoding join, so cond items filter the
+            # encoded frame instead of re-running the dict extension
+            enc_cache[param] = _encode_tail(rt, inst, param, spark, tail_cov())
+        tail_enc, ext_dict = enc_cache[param]
         b_side = batch_scan if cond is None else batch_scan.filter(F.expr(cond))
         t_side = tail_enc if cond is None else tail_enc.filter(F.expr(cond))
+        # the cohort column may itself be a group key — dedupe
+        grain = G + ([fcol] if fcol is not None and fcol not in G else [])
         tail_bags = GD.bitmap_build_agg(t_side, grain, GD.dict_col(param), mname)
         frame = b_side.select(*grain, mname).unionByName(tail_bags)
-        if kind == "intersect_value":
-            extra = (fcol, list(vals), ext_dict)
-        state_frames.append((item, kind, frame, mname, extra))
-    for item in pct_gs:
-        # additive sketch state at the finest grain; each set re-merges it
-        from kylin_on_parquet_v2_spark.cube import kll as KLL
-        from kylin_on_parquet_v2_spark.cube import measures as M
-        from kylin_on_parquet_v2_spark.query.router import (
-            _hist_measure_for,
-            _kll_measure_for,
-        )
-
-        a = item.agg
-        m = _hist_measure_for(a.column, inst)
-        if m is not None:
-            tail = (rt.groupBy(*G) if G else rt.groupBy()).agg(
-                M.hist_build(m.function, m.name)
-            )
-            kind = "pct-hist"
+        if fcol is None:
+            counts, empty = partial(GD.bitmap_count, frame, name=mname, alias=name), 0
+        elif name in route.bitmap_intersect:
+            counts, empty = partial(
+                GD.bitmap_intersect_count, frame, name=mname, filter_col=fcol,
+                values_sql=list(vals), alias=name,
+            ), 0
         else:
-            m = _kll_measure_for(a.column, inst)
-            # two-phase: bounded per-partition partials even on a hot tail
-            tail = KLL.kll_build_two_phase(rt, list(G), [(m.function, m.name)])
-            kind = "pct-kll"
-        frame = batch_scan.select(*G, m.name).unionByName(tail)
-        state_frames.append((item, kind, frame, m, a.q))
-    for item in dd_gs:
+            # INTERSECT_VALUE decodes through the EXTENDED dictionary: a
+            # tail-only value's id exists nowhere in the persisted one
+            counts, empty = partial(
+                GD.bitmap_intersect_value, frame, name=mname, filter_col=fcol,
+                values_sql=list(vals), alias=name, dictionary=ext_dict,
+            ), ""
+        states.append((name, counts, empty))
+    for items in pct_by_col.values():
+        # one merged sketch per COLUMN, every quantile asked of it read from
+        # the same aggregate: the stored state (histogram bins / KLL weighted
+        # sample) is additive and the split disjoint, so batch + tail
+        # sketches merge exactly. NO fill: the percentile of a group with no
+        # values is NULL, exactly like percentile_approx over zero rows
+        m, build, quantile = percentile_sketch(items[0].agg.column, inst)
+        frame = batch_scan.select(*G, m.name).unionByName(build(rt, G))
+        aggs = [quantile(it.agg.q).alias(it.name) for it in items]
+        states.append((None, partial(_agg_at, frame, aggs=aggs), None))
+    for item in dd_items:
+        # dims survive in the layout: set-union the layout's distinct dim
+        # tuples with the tail's rows, count once (DimCountDistinct across
+        # the split — set union is idempotent by definition)
         cols = _dim_distinct_cols(item.agg, route)
         extra = [c for c in cols if c not in G]
         frame = batch_scan.select(*G, *extra).unionByName(rt.select(*G, *extra))
-        state_frames.append((item, "dimdd", frame, None, cols))
+        nd = F.count_distinct(*[F.col(c) for c in cols]).alias(item.name)
+        states.append((item.name, partial(_agg_at, frame, aggs=[nd]), 0))
 
-    types = dict(batch_scan.select(*G).dtypes) if G else {}
+    sets = digest.grouping_sets if digest.grouping_sets is not None else [G]
+    types: dict = {}
     branches = []
-    for gset in digest.grouping_sets:
-        gl = list(gset)
-        if mgd is not None:
-            grouped = mgd.groupBy(*gl) if gl else mgd.groupBy()
-            aggs = []
-            for n, f in plain_items:
-                merged = _MERGE[f](n)
-                if f == "COUNT":
-                    merged = merged.cast("long")
-                aggs.append(merged.alias(n))
-            branch = grouped.agg(*aggs)
-        elif gl:
-            branch = universe.select(*gl).dropDuplicates()
+    for gset in sets:
+        keys = list(gset)
+        if mgd is None or keys == G:
+            branch = mgd  # the finest set is the merged frame itself
+        elif merge_aggs:
+            branch = mgd.groupBy(*keys).agg(*merge_aggs)
+        elif keys:
+            branch = mgd.select(*keys).dropDuplicates()
         else:
-            branch = None
-        for item, kind, frame, mname, extra in state_frames:
-            if kind == "hll":
-                counts = (frame.groupBy(*gl) if gl else frame.groupBy()).agg(
-                    F.hll_sketch_estimate(F.hll_union_agg(mname)).alias(item.name)
-                )
-            elif kind == "intersect":
-                fcol, vals = extra
-                counts = GD.bitmap_intersect_count(
-                    frame, gl, mname, fcol, vals, item.name
-                )
-            elif kind == "intersect_value":
-                fcol, vals, ext_dict = extra
-                counts = GD.bitmap_intersect_value(
-                    frame, gl, mname, fcol, vals, item.name, ext_dict
-                )
-            elif kind == "pct-hist":
-                from kylin_on_parquet_v2_spark.cube import measures as M
-
-                counts = (frame.groupBy(*gl) if gl else frame.groupBy()).agg(
-                    M.hist_percentile(
-                        mname.function, M.hist_reagg(mname.function, mname.name), extra
-                    ).alias(item.name)
-                )
-            elif kind == "pct-kll":
-                from kylin_on_parquet_v2_spark.cube import kll as KLL
-
-                counts = (frame.groupBy(*gl) if gl else frame.groupBy()).agg(
-                    KLL.kll_percentile(
-                        mname.function, KLL.kll_reagg(mname.function, mname.name), extra
-                    ).alias(item.name)
-                )
-            elif kind == "dimdd":
-                counts = (frame.groupBy(*gl) if gl else frame.groupBy()).agg(
-                    F.count_distinct(*[F.col(c) for c in extra]).alias(item.name)
-                )
-            else:
-                counts = GD.bitmap_count(frame, gl, mname, item.name)
-            if branch is None:
-                branch = counts
-            else:
-                branch = join_null_safe(branch, counts, gl, "left")
-            if kind == "intersect_value":
-                # an absent group's intersection renders the empty STRING
-                branch = branch.withColumn(
-                    item.name, F.coalesce(F.col(item.name), F.lit(""))
-                )
-            elif kind not in ("pct-hist", "pct-kll"):
-                # percentile of an absent group stays NULL; counts snap to 0
-                branch = branch.withColumn(
-                    item.name, F.coalesce(F.col(item.name), F.lit(0)).cast("long")
-                )
-        sel_cols = []
-        for item in digest.select:
-            if item.group_col is not None:
-                if item.group_col in gset:
-                    sel_cols.append(F.col(item.group_col).alias(item.name))
-                else:
-                    sel_cols.append(
-                        F.lit(None).cast(types[item.group_col]).alias(item.name)
-                    )
-            elif item.grouping_of is not None:
-                sel_cols.append(
-                    F.lit(0 if item.grouping_of in gset else 1)
-                    .cast("tinyint")
-                    .alias(item.name)
-                )
-            elif item.name in avg_parts:
-                sa, ca = avg_parts[item.name]
-                sel_cols.append((F.col(sa) / F.col(ca)).alias(item.name))
-            else:
-                sel_cols.append(F.col(item.name))
-        branches.append(branch.select(*sel_cols))
+            branch = None  # global set whose only aggs are state-served
+        for name, counts, empty in states:
+            branch = join_counts(branch, counts(keys), keys, name, empty)
+        proj = set_projection(digest, gset, batch_scan, types, avg_parts)
+        branches.append(branch.select(*proj))
     result = branches[0]
     for b in branches[1:]:
         result = result.unionAll(b)
     return apply_post_aggregation(digest, result)
 
 
-def _pct_counts(
-    items,
-    inst: CubeInstance,
-    rt: DataFrame,
-    batch_scan: DataFrame,
-    grain: list,
-    spark: SparkSession,
-) -> DataFrame:
-    """Percentile across the split: the stored sketch state (fixed-bin
-    histogram / KLL weighted sample) is ADDITIVE, and the boundary split is
-    disjoint, so batch layout sketches + a sketch built over the tail merge
-    exactly — the served answer equals the sketch over the whole table,
-    within the sketch's own declared accuracy (bin width / rank error).
-
-    ``items`` all target ONE source column: the tail sketch is built once
-    and every requested quantile is extracted from the same merged state in
-    one aggregate (r14; previously each percentile output re-built the
-    tail sketch and re-merged — the r13 one-sketch-queried-twice lesson)."""
-    from kylin_on_parquet_v2_spark.cube import kll as KLL
-    from kylin_on_parquet_v2_spark.cube import measures as M
-    from kylin_on_parquet_v2_spark.query.router import (
-        _hist_measure_for,
-        _kll_measure_for,
-    )
-
-    column = items[0].agg.column
-    m = _hist_measure_for(column, inst)
-    if m is not None:
-        tail = (rt.groupBy(*grain) if grain else rt.groupBy()).agg(
-            M.hist_build(m.function, m.name)
-        )
-        merged = M.hist_reagg(m.function, m.name)
-        aggs = [
-            M.hist_percentile(m.function, merged, it.agg.q).alias(it.name)
-            for it in items
-        ]
-    else:
-        m = _kll_measure_for(column, inst)
-        # two-phase: bounded per-partition partials even on a hot tail
-        tail = KLL.kll_build_two_phase(rt, list(grain), [(m.function, m.name)])
-        merged = KLL.kll_reagg(m.function, m.name)
-        aggs = [
-            KLL.kll_percentile(m.function, merged, it.agg.q).alias(it.name)
-            for it in items
-        ]
-    frame = batch_scan.select(*grain, m.name).unionByName(tail)
-    return (frame.groupBy(*grain) if grain else frame.groupBy()).agg(*aggs)
+def _agg_at(frame: DataFrame, keys: list, aggs: list) -> DataFrame:
+    """``aggs`` over ``frame`` grouped by one grouping set's keys."""
+    return frame.groupBy(*keys).agg(*aggs)

@@ -304,6 +304,39 @@ def test_hybrid_percentile_under_rollup(engine):
         assert got[k][1] == exp[k][1]
 
 
+def test_hybrid_rollup_percentiles_share_one_tail_sketch(engine, monkeypatch):
+    """Two quantiles of one column under ROLLUP build the tail histogram
+    ONCE: the merged sketch is per column, not per percentile output, and
+    every grouping set re-merges that one state."""
+    from kylin_on_parquet_v2_spark.cube import measures as M
+
+    real = M.hist_build
+    calls = []
+
+    def counting(*args, **kwargs):
+        calls.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(M, "hist_build", counting)
+    sql = (
+        "select etype, grouping(etype) as g_e, percentile_approx(v, 0.5) as p50, "
+        "percentile_approx(v, 0.9) as p90 from hd_fact group by rollup(etype)"
+    )
+    df = engine.sql(sql)
+    assert engine.last_route is not None and engine.last_route.hybrid_tail
+    assert len(calls) == 1, calls
+    got = {(r["etype"], r["g_e"]): (r["p50"], r["p90"]) for r in df.collect()}
+    exp = {
+        (r["etype"], r["g_e"]): (r["p50"], r["p90"])
+        for r in engine.pushdown(sql).collect()
+    }
+    bin_w = 20.0 / 64
+    assert set(got) == set(exp) and len(got) == 4
+    for k in got:
+        assert abs(got[k][0] - exp[k][0]) <= bin_w, (k, got[k], exp[k])
+        assert abs(got[k][1] - exp[k][1]) <= bin_w, (k, got[k], exp[k])
+
+
 def test_hybrid_dim_distinct_across_boundary(engine):
     """COUNT DISTINCT on cuboid DIMENSIONS across the split: the layout's
     distinct dim tuples set-union the tail's rows — idempotent by
