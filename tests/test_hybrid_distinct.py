@@ -337,6 +337,15 @@ def test_hybrid_rollup_percentiles_share_one_tail_sketch(engine, monkeypatch):
         assert abs(got[k][1] - exp[k][1]) <= bin_w, (k, got[k], exp[k])
 
 
+def test_hybrid_group_only_query_serves_group_universe(engine):
+    """A GROUP BY with no aggregate serves the batch∪tail group universe,
+    groups seen only in the tail ("purchase") included."""
+    sql = "select etype from hd_fact group by etype"
+    got = {tuple(r) for r in engine.sql(sql).collect()}
+    assert engine.last_route is not None and engine.last_route.hybrid_tail
+    assert got == _pushdown(engine, sql) and ("purchase",) in got
+
+
 def test_hybrid_dim_distinct_across_boundary(engine):
     """COUNT DISTINCT on cuboid DIMENSIONS across the split: the layout's
     distinct dim tuples set-union the tail's rows — idempotent by
