@@ -201,7 +201,13 @@ def bitmap_reagg(df: DataFrame, keys: list[str], name: str) -> DataFrame:
 
 
 def bitmap_count(df: DataFrame, keys: list[str], name: str, alias: str) -> DataFrame:
-    """Finalize: exact distinct count per group from the word bags."""
+    """Finalize: exact distinct count per group from the word bags.
+
+    The universe is the groups with at least one bag word: ``explode``
+    drops a row whose bag is empty or NULL, so a group with no word has
+    no row here, and a caller that must report it as 0 joins these counts
+    onto its groups and coalesces (``router.join_counts``). With no keys
+    the one global row counts NULL when no row has a word."""
     words = (
         df.select(*keys, F.explode(name).alias("__w"))
         .groupBy(*keys, F.col("__w.__bkt").alias("__bkt"))

@@ -61,7 +61,8 @@ class Decision:
     - ``routed``: one cuboid serves ``plan`` (a SqlDigest);
     - ``multi``: ``plan`` joins or set-combines aggregate islands, each
       routed on its own (one route per island);
-    - ``pushdown``: digestible, but no cube serves it;
+    - ``pushdown``: digestible, but no cube serves it, or building its
+      routed answer raised;
     - ``undigestible``: no digest and no routable multi-context shape;
     - ``bypass``: routing off or no cube registered — never counted or
       memoized.
@@ -554,6 +555,8 @@ class OlapEngine:
                 Decision("routed", digest, (best[1],), workload_cols=cols),
                 approx_distinct,
             )
+            if out is None:
+                return decision, None
             return self._freeze(decision, out, epochs), out
         reason = "undigestible"
         for extract in (extract_join_digest, extract_union_digest, extract_agg_over_union):
@@ -606,10 +609,16 @@ class OlapEngine:
         memoized hybrid one. Returns the decision as served — a
         multi-context one carries the routes its islands took this time —
         and the answer; the answer is None, and the decision carries the
-        reason, when ``d`` cannot be served."""
+        reason, when ``d`` cannot be served. A routed decision whose answer
+        fails to build is served as a pushdown."""
         if d.kind == "routed":
             route = d.routes[0]
-            return d, self._execute_planned(d.plan, self.cubes[route.cube], route)
+            try:
+                return d, self._execute_planned(d.plan, self.cubes[route.cube], route)
+            except Exception as exc:  # build surprise — pushdown is always right
+                return Decision(
+                    "pushdown", workload_cols=d.workload_cols, reason=_exc_reason(exc)
+                ), None
         execute = {
             JoinOfAggregates: self._execute_join_digest,
             UnionOfAggregates: self._execute_union_digest,

@@ -30,6 +30,7 @@ from functools import partial
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DecimalType, StructType
 
 from kylin_on_parquet_v2_spark.cube import dictionary as GD
 from kylin_on_parquet_v2_spark.cube.build import (
@@ -1343,14 +1344,18 @@ def execute_route(
                 out_cols.append(F.col(m.name).alias(item.name))
         result = df.select(*out_cols)
     else:
-        agg_cols: list[Column] = []
-        # exact bag-served outputs, each counted per grouping set on that
-        # set's keys by its own explode -> bit_or-per-word -> bit_count
-        # pipeline: (output name, counts(keys) -> frame, value of a group
-        # with no bag — an all-NULL group counts 0, an empty INTERSECT_VALUE
-        # renders "" per valueResult's empty-result contract)
+        # plain outputs in select order: (name, MERGE-family func, stored
+        # column — a (SUM, COUNT) pair for AVG) when the output re-merges
+        # from per-row partials, else (name, None, its one-level column)
+        plain: list[tuple] = []
+        # word-bag COUNT DISTINCT outputs: (name, bag column, cohort
+        # condition or None) — plain distinct first, then cohort-filtered
         distinct_bags: list[tuple] = []
         cond_bags: list[tuple] = []
+        # INTERSECT bags, each counted per grouping set on that set's keys
+        # by its own pipeline: (output name, counts(keys) -> frame, value of
+        # a group with no bag — an empty intersection counts 0, an empty
+        # INTERSECT_VALUE renders "" per valueResult's empty-result contract)
         intersect_bags: list[tuple] = []
         value_bags: list[tuple] = []
         for item in digest.select:
@@ -1360,9 +1365,7 @@ def execute_route(
             if item.name in route.bitmap_cond:
                 # cohort-filtered bags: cond references layout/derived columns
                 mname, cond = route.bitmap_cond[item.name]
-                cdf = df.filter(F.expr(cond))
-                counts = partial(GD.bitmap_count, cdf, name=mname, alias=item.name)
-                cond_bags.append((item.name, counts, 0))
+                cond_bags.append((item.name, mname, cond))
             elif item.name in route.bitmap_intersect:
                 mname, fcol, vals = route.bitmap_intersect[item.name]
                 counts = partial(
@@ -1386,42 +1389,60 @@ def execute_route(
                     # multi-column distinct over layout rows (SQL semantics:
                     # rows with any NULL column excluded — Spark's native
                     # count_distinct over several columns does exactly that)
-                    agg_cols.append(
-                        F.count_distinct(
-                            *[F.col(c) for c in agg.columns]
-                        ).alias(item.name)
-                    )
+                    col = F.count_distinct(*[F.col(c) for c in agg.columns])
+                    plain.append((item.name, None, col))
                 elif item.name in route.bitmap_distinct:
-                    mname = route.bitmap_distinct[item.name]
-                    counts = partial(GD.bitmap_count, df, name=mname, alias=item.name)
-                    distinct_bags.append((item.name, counts, 0))
+                    distinct_bags.append((item.name, route.bitmap_distinct[item.name], None))
                 elif item.name in route.approx_distinct:
-                    agg_cols.append(
-                        F.hll_sketch_estimate(
-                            F.hll_union_agg(route.approx_distinct[item.name])
-                        ).alias(item.name)
+                    col = F.hll_sketch_estimate(
+                        F.hll_union_agg(route.approx_distinct[item.name])
                     )
+                    plain.append((item.name, None, col))
                 else:
-                    agg_cols.append(F.countDistinct(agg.column).alias(item.name))
+                    plain.append((item.name, None, F.countDistinct(agg.column)))
             elif agg.func == "PERCENTILE":
                 _, _, quantile = percentile_sketch(agg.column, inst)
-                agg_cols.append(quantile(agg.q).alias(item.name))
+                plain.append((item.name, None, quantile(agg.q)))
             elif agg.func == "AVG":
                 s = _measure_for(AggCall("SUM", agg.column, False, "", agg.expr_sql), inst)
                 c = _measure_for(AggCall("COUNT", agg.column, False, "", agg.expr_sql), inst)
-                agg_cols.append((F.sum(s.name) / F.sum(c.name)).alias(item.name))
+                plain.append((item.name, "AVG", (s.name, c.name)))
             elif item.name in route.dim_served:
                 # dimension-as-measure: min/max straight over the layout's
                 # dim values (no stored measure involved)
-                fn = F.min if agg.func == "MIN" else F.max
-                agg_cols.append(fn(route.dim_served[item.name]).alias(item.name))
+                plain.append((item.name, agg.func, route.dim_served[item.name]))
             else:
-                m = _measure_for(agg, inst)
-                col = MERGE[agg.func](m.name)
-                if agg.func == "COUNT":
-                    col = col.cast("long")  # COUNT re-agg is SUM of stored counts
-                agg_cols.append(col.alias(item.name))
-        bag_counts = distinct_bags + cond_bags + intersect_bags + value_bags
+                plain.append((item.name, agg.func, _measure_for(agg, inst).name))
+        word_bags = distinct_bags + cond_bags
+        # one bag column beside only MERGE-family outputs: each set is ONE
+        # two-level aggregation of the scan (fold_word_bags) — no dims-only
+        # branch, second layout read or join
+        fold = (
+            len({mname for _, mname, _ in word_bags}) == 1
+            and not intersect_bags
+            and not value_bags
+            and all(func is not None for _, func, _ in plain)
+        )
+        if fold:
+            agg_cols, bag_counts = [], []
+        else:
+            agg_cols = [
+                (col if func is None else merge_column(func, col)).alias(name)
+                for name, func, col in plain
+            ]
+            bag_counts = [
+                (
+                    name,
+                    partial(
+                        GD.bitmap_count,
+                        df if cond is None else df.filter(F.expr(cond)),
+                        name=mname,
+                        alias=name,
+                    ),
+                    0,
+                )
+                for name, mname, cond in word_bags
+            ] + intersect_bags + value_bags
 
         # One aggregation per grouping set, unioned back (a plain GROUP BY
         # is the one-set case): AggregateMultipleExpandRule.java:45-120
@@ -1437,7 +1458,12 @@ def execute_route(
         branches = []
         for gset in sets:
             keys = list(gset)
-            if agg_cols:
+            if fold:
+                branch = fold_word_bags(
+                    df, keys, word_bags, plain,
+                    inst.layout_schemas[route.cuboid.cuboid_id],
+                )
+            elif agg_cols:
                 branch = df.groupBy(*keys).agg(*agg_cols)
             elif keys or not bag_counts:
                 # SELECT DISTINCT / group-cols-only output: GroupedData.agg()
@@ -1454,6 +1480,69 @@ def execute_route(
             result = result.unionAll(b)
 
     return apply_post_aggregation(digest, result)
+
+
+def merge_column(func: str, col) -> Column:
+    """One-level re-aggregate of a MERGE-family output over its stored
+    column (an AVG's ``col`` is its (SUM, COUNT) measure pair)."""
+    if func == "AVG":
+        return F.sum(col[0]) / F.sum(col[1])
+    merged = MERGE[func](col)
+    # COUNT re-agg is SUM of stored counts
+    return merged.cast("long") if func == "COUNT" else merged
+
+
+def _ident(name: str) -> str:
+    """``name`` as a quoted SQL identifier (Spark's quoteIdentifier)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def fold_word_bags(
+    df: DataFrame, keys: list, bags: list, plain: list, schema: StructType
+) -> DataFrame:
+    """One grouping set whose bag outputs all read ONE word-bag column,
+    beside only MERGE-family outputs, as one two-level aggregation of the
+    routed scan ``df`` (PreciseCountDistinct.scala parity: the stored
+    bitmaps re-merge inside the re-aggregation itself).
+
+    ``posexplode_outer`` gives a layout row one row per bag word, or one
+    row with a NULL position when its bag is empty or NULL, so every group
+    of the scan survives. Level 1 groups by (keys, word bucket): one
+    ``bit_or`` per bag output, with any cohort condition inside it, and
+    each plain partial taken from a layout row's first word only, so the
+    row's measures count once. Level 2 groups by keys: the sum of
+    ``bit_count`` (0 for a group with no word) and the same merge over the
+    partials. A decimal SUM widens at each level, so it is cast back to
+    its one-level type; every other output keeps that type already.
+
+    Each aggregate is one parsed SQL expression: the same trees spelled
+    with the Column API cost several times the py4j round trips
+    (``hist_reagg`` makes the same trade)."""
+    rows = df.selectExpr("*", f"posexplode_outer({_ident(bags[0][1])}) AS (__pos, __w)")
+    level1, level2 = [], []
+    for i, (name, _, cond) in enumerate(bags):
+        word = "__w.__mask" if cond is None else f"CASE WHEN ({cond}) THEN __w.__mask END"
+        level1.append(f"bit_or({word}) AS __b{i}")
+        level2.append(f"coalesce(sum(bit_count(__b{i})), 0) AS {_ident(name)}")
+    for i, (name, func, col) in enumerate(plain):
+        stored = col if func == "AVG" else (col,)
+        fn = func.lower() if func in ("MIN", "MAX") else "sum"
+        level1 += [
+            f"{fn}(CASE WHEN __pos IS NULL OR __pos = 0 THEN {_ident(c)} END) AS __p{i}_{j}"
+            for j, c in enumerate(stored)
+        ]
+        merged = f"{fn}(__p{i}_0)"
+        t = schema[stored[0]].dataType if func in ("SUM", "AVG") else None
+        if isinstance(t, DecimalType):
+            widened = DecimalType(min(38, t.precision + 10), t.scale)
+            merged = f"CAST({merged} AS {widened.simpleString()})"
+        if func == "COUNT":
+            merged = f"CAST({merged} AS BIGINT)"
+        elif func == "AVG":
+            merged = f"{merged} / sum(__p{i}_1)"
+        level2.append(f"{merged} AS {_ident(name)}")
+    words = rows.groupBy(*keys, F.expr("__w.__bkt AS __bkt")).agg(*map(F.expr, level1))
+    return words.groupBy(*keys).agg(*map(F.expr, level2))
 
 
 def join_counts(branch, counts: DataFrame, keys: list, name: str, empty) -> DataFrame:

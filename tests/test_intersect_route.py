@@ -31,6 +31,8 @@ EV_CUBE = CubeDesc(
     measures=(
         MeasureDesc("_cnt", FunctionDesc("COUNT")),
         MeasureDesc("bm_uid", FunctionDesc("COUNT_DISTINCT", "uid", "bitmap")),
+        # a second bag column: distinct outputs over two bags take the join path
+        MeasureDesc("bm_sid", FunctionDesc("COUNT_DISTINCT", "sid", "bitmap")),
     ),
 )
 
@@ -40,18 +42,19 @@ def engine(spark, tmp_path_factory):
     # group x: uid 1,2 view; uid 2 click  -> view∩click = {2}
     # group y: uid 3 view; uid 4 click    -> view∩click = {}   (empty)
     # group z: uid 5 view only            -> click cohort absent entirely
+    # sid: a second distinct column, all NULL in group y
     rows = [
-        ("x", "view", 1),
-        ("x", "view", 2),
-        ("x", "click", 2),
-        ("x", "view", 1),  # duplicate event must not double-count
-        ("y", "view", 3),
-        ("y", "click", 4),
-        ("z", "view", 5),
+        ("x", "view", 1, 10),
+        ("x", "view", 2, 10),
+        ("x", "click", 2, 11),
+        ("x", "view", 1, 12),  # duplicate event must not double-count
+        ("y", "view", 3, None),
+        ("y", "click", 4, None),
+        ("z", "view", 5, 13),
     ]
-    spark.createDataFrame(rows, "g string, etype string, uid int").createOrReplaceTempView(
-        "ev_f"
-    )
+    spark.createDataFrame(
+        rows, "g string, etype string, uid int, sid int"
+    ).createOrReplaceTempView("ev_f")
     eng = OlapEngine(spark, storage_dir=str(tmp_path_factory.mktemp("ic_cubes")))
     eng.add_model(EV_MODEL)
     eng.build_cube(EV_CUBE)
@@ -260,6 +263,52 @@ def test_intersect_value_under_rollup_routes(engine):
     assert route is not None and route.bitmap_intersect_value, route
     rows = {r.g: r.vc for r in df.collect()}
     assert rows == {"x": "[2]", "y": "", "z": "", None: "[2]"}
+
+
+def _join_path(df) -> bool:
+    """The answer joins per-bag counts onto its groups instead of
+    folding one bag column into a single two-level aggregation."""
+    plan = df._jdf.queryExecution().analyzed().toString()
+    return "Join" in plan and "posexplode" not in plan
+
+
+def test_intersect_count_takes_the_join_path(engine):
+    """INTERSECT_COUNT has no one-pass form: each of its outputs keeps its
+    own count frame, joined onto the set's groups."""
+    df = engine.sql(
+        """
+        select g, intersect_count(uid, etype, array('view','click')) as vc,
+               intersect_count(uid, etype, array('view')) as v
+        from ev_f group by g
+        """,
+        validate=True,
+    )
+    route = engine.last_route
+    assert route is not None and route.bitmap_intersect, route
+    assert _join_path(df)
+    assert {r.g: (r.vc, r.v) for r in df.collect()} == {
+        "x": (1, 2), "y": (0, 1), "z": (0, 1),
+    }
+
+
+def test_two_bag_columns_take_the_join_path(engine):
+    """Distinct outputs over two bag columns keep one count frame per bag;
+    a group whose second column is all NULL counts 0."""
+    df = engine.sql(
+        """
+        select g, count(distinct uid) as nu, count(distinct sid) as ns
+        from ev_f group by g
+        """,
+        validate=True,
+    )
+    route = engine.last_route
+    assert route is not None and route.bitmap_distinct == {"nu": "bm_uid", "ns": "bm_sid"}
+    assert _join_path(df)
+    assert df.dtypes == engine.pushdown("select g, count(distinct uid) as nu, "
+                                        "count(distinct sid) as ns from ev_f group by g").dtypes
+    assert {r.g: (r.nu, r.ns) for r in df.collect()} == {
+        "x": (2, 3), "y": (2, 0), "z": (1, 1),
+    }
 
 
 def test_cohort_members_parsing():

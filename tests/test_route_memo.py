@@ -16,6 +16,7 @@ from __future__ import annotations
 import pytest
 
 from kylin_on_parquet_v2_spark.datasets import TPCH_CUBE, TPCH_MODEL
+from kylin_on_parquet_v2_spark.query import engine as engine_mod
 from kylin_on_parquet_v2_spark.query.engine import OlapEngine
 from tests.conftest import SF_SMOKE
 
@@ -346,3 +347,21 @@ def test_miss_reasons_recorded_and_explained(eng, monkeypatch):
     assert eng.last_decision.kind == "undigestible"
     assert eng.last_decision.reason == "RuntimeError: island planner broke"
     assert "\nreason: RuntimeError: island planner broke\n" in eng.explain(sql)
+
+
+def test_routed_build_error_falls_back_to_pushdown(eng, monkeypatch):
+    """An error while building a single routed answer falls back to
+    spark.sql like a multi-context one: the decision is a pushdown whose
+    reason names the exception, and no analyzed plan is frozen for it."""
+
+    def boom(*_args, **_kwargs):
+        raise ValueError("layout scan broke\nsecond line")
+
+    monkeypatch.setattr(engine_mod, "execute_route", boom)
+    sql = ROUTED_SQL + " order by l_returnflag"
+    got = [tuple(r) for r in eng.sql(sql).collect()]
+    assert got == [tuple(r) for r in eng.pushdown(sql).collect()]
+    d = eng.last_decision
+    assert d.kind == "pushdown" and d.analyzed is None and d.routes == ()
+    assert d.reason == "ValueError: layout scan broke"
+    assert eng.last_route is None
