@@ -35,7 +35,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import DecimalType, StructType
+from pyspark.sql.types import DecimalType, DoubleType, StructType
 
 from kylin_on_parquet_v2_spark.metadata.cube import FunctionDesc, MeasureDesc
 
@@ -178,6 +178,60 @@ def hist_percentile(func: FunctionDesc, col: Column, q: float) -> Column:
     return F.lit(lo) + (first["i"].cast("double") - F.lit(0.5)) * F.lit(w)
 
 
+#: how each column of an :func:`exact_sum_state` re-merges at a next level
+EXACT_SUM_MERGE = ("max", "sum", "sum", "sum")
+#: partials below 2**62 in magnitude sum exactly, on a grid of 2**-62
+_EXACT_SUM_BOUND = f"{2.0**62!r}D"
+_EXACT_SUM_SCALE = 2**62
+
+
+def exact_sum_state(x: str) -> list[str]:
+    """The aggregated state of an exact double SUM over the SQL expression
+    ``x`` (stored or partial sums): ``max(abs(x))``, the plain ``sum(x)``,
+    and the sums of x's integer part and of its fraction times 2**62, each
+    cast to BIGINT (truncating toward zero) and summed as a decimal. Both
+    casts are exact below 2**62: ``x % 1`` of a double and its scaling by a
+    power of two are exact, so only a fraction's bits below 2**-62 are
+    dropped (a partial of 2**-10 or more in magnitude has none). The
+    decimal sums cannot overflow under 10**10 rows, so the state re-merges
+    column by column with :data:`EXACT_SUM_MERGE` and a two-level plan
+    sums exactly what a one-level plan does."""
+    return [
+        f"max(abs({x}))",
+        f"sum({x})",
+        f"sum(CAST(try_cast({x} AS BIGINT) AS DECIMAL(19,0)))",
+        f"sum(CAST(try_cast({x} % 1D * {float(_EXACT_SUM_SCALE)!r}D AS BIGINT) AS DECIMAL(19,0)))",
+    ]
+
+
+def exact_sum_final(state: list[str]) -> str:
+    """SQL of the double an aggregated :func:`exact_sum_state` stands for.
+
+    Exactness contract: when every partial is finite and below 2**62 in
+    magnitude, the state re-assembles the sum of the partials times 2**62
+    as one DECIMAL(38,0) integer, and the answer is that exact sum rounded
+    ONCE to double: the correctly rounded sum of the partials
+    (``math.fsum``), whatever their order, partition count or segment
+    layout, after each partial's bits below 2**-62 are truncated. A NaN,
+    an infinity or a partial of 2**62 or more, and a sum of about 2.1e19
+    or more (past DECIMAL(38,0)), fall back to the plain ``sum`` in scan
+    order, so NaN and infinity keep Spark's semantics."""
+    top, plain, whole, frac = state
+    scaled = (
+        f"try_add(try_multiply(CAST({whole} AS DECIMAL(38,0)), {_EXACT_SUM_SCALE}BD), {frac})"
+    )
+    return (
+        f"coalesce(CASE WHEN {top} < {_EXACT_SUM_BOUND}"
+        f" THEN CAST({scaled} AS DOUBLE) * {2.0**-62!r}D END, {plain})"
+    )
+
+
+def exact_sum_sql(x: str) -> str:
+    """One-level exact double SUM of the SQL expression ``x`` (the
+    contract of :func:`exact_sum_final`)."""
+    return exact_sum_final(exact_sum_state(x))
+
+
 def topn_k(func: FunctionDesc) -> int:
     rt = func.returntype or ""
     if rt.startswith("topn(") and rt.endswith(")"):
@@ -260,18 +314,22 @@ def reagg_from_layout(measure: MeasureDesc, schema: StructType | None = None) ->
     COUNT becomes SUM (CuboidAggregator.scala:86-91); sketches union. SUM
     over a decimal layout column re-casts to the stored type — otherwise
     each build layer widens precision again ((29,4) -> (38,4) -> ...), the
-    exact creep CuboidAggregator.scala:125-132 exists to stop.
+    exact creep CuboidAggregator.scala:125-132 exists to stop. SUM over a
+    double layout column re-merges exactly (:func:`exact_sum_final`), so a
+    child layout or a merged segment stores the exact sum of its parent's
+    partials rounded once, whatever their scan order.
     """
     f = measure.function
     name = measure.name
     if f.expression == "COUNT":
         return F.sum(name).cast("long").alias(name)
     if f.expression == "SUM":
+        dt = schema[name].dataType if schema is not None and name in schema.fieldNames() else None
+        if isinstance(dt, DoubleType):
+            return F.expr(exact_sum_sql("`" + name.replace("`", "``") + "`")).alias(name)
         out = F.sum(name)
-        if schema is not None and name in schema.fieldNames():
-            dt = schema[name].dataType
-            if isinstance(dt, DecimalType):
-                out = out.cast(dt)
+        if isinstance(dt, DecimalType):
+            out = out.cast(dt)
         return out.alias(name)
     if f.expression == "MIN":
         return F.min(name).alias(name)

@@ -30,9 +30,10 @@ from functools import partial
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DecimalType, StructType
+from pyspark.sql.types import DecimalType, DoubleType, StructType
 
 from kylin_on_parquet_v2_spark.cube import dictionary as GD
+from kylin_on_parquet_v2_spark.cube import measures as M
 from kylin_on_parquet_v2_spark.cube.build import (
     SEGMENT_COL,
     SHARD_COL,
@@ -599,13 +600,11 @@ def _bitmap_measure_for(col: str, inst: CubeInstance) -> MeasureDesc | None:
 
 
 def _hist_measure_for(col: str, inst: CubeInstance) -> MeasureDesc | None:
-    from kylin_on_parquet_v2_spark.cube.measures import hist_spec
-
     for m in inst.desc.measures:
         if (
             m.function.expression == "PERCENTILE_APPROX"
             and m.function.parameter == col
-            and hist_spec(m.function) is not None
+            and M.hist_spec(m.function) is not None
         ):
             return m
     return None
@@ -634,7 +633,6 @@ def percentile_sketch(col: str, inst: CubeInstance):
     hybrid tail's state); ``quantile(q)`` reads q from the re-merged state,
     one merge expression shared by every quantile asked of the column."""
     from kylin_on_parquet_v2_spark.cube import kll as KLL
-    from kylin_on_parquet_v2_spark.cube import measures as M
 
     m = _hist_measure_for(col, inst)
     if m is not None:
@@ -1423,11 +1421,12 @@ def execute_route(
             and not value_bags
             and all(func is not None for _, func, _ in plain)
         )
+        schema = inst.layout_schemas[route.cuboid.cuboid_id]
         if fold:
             agg_cols, bag_counts = [], []
         else:
             agg_cols = [
-                (col if func is None else merge_column(func, col)).alias(name)
+                (col if func is None else merge_column(func, col, schema)).alias(name)
                 for name, func, col in plain
             ]
             bag_counts = [
@@ -1459,10 +1458,7 @@ def execute_route(
         for gset in sets:
             keys = list(gset)
             if fold:
-                branch = fold_word_bags(
-                    df, keys, word_bags, plain,
-                    inst.layout_schemas[route.cuboid.cuboid_id],
-                )
+                branch = fold_word_bags(df, keys, word_bags, plain, schema)
             elif agg_cols:
                 branch = df.groupBy(*keys).agg(*agg_cols)
             elif keys or not bag_counts:
@@ -1482,14 +1478,44 @@ def execute_route(
     return apply_post_aggregation(digest, result)
 
 
-def merge_column(func: str, col) -> Column:
+def merge_column(func: str, col, schema: StructType | None = None) -> Column:
     """One-level re-aggregate of a MERGE-family output over its stored
-    column (an AVG's ``col`` is its (SUM, COUNT) measure pair)."""
+    column (an AVG's ``col`` is its (SUM, COUNT) measure pair).
+
+    A SUM, or an AVG's SUM half, over a stored ``double`` column (its type
+    read from ``schema``, the layout's schema) re-merges the partials
+    EXACTLY and rounds once (``measures.exact_sum_final``): the answer is
+    the correctly rounded sum of the partials (``math.fsum``), the same for
+    any scan order, partition count or segment layout, and stays
+    ``double``. A partial's bits below 2**-62 are truncated first (only a
+    partial under 2**-10 in magnitude has any). A NaN, an infinity or a
+    partial of 2**62 or more in magnitude, or a sum of about 2.1e19 or
+    more, falls back to the scan-order ``sum``, so NaN and infinity keep
+    Spark's semantics. Integer, long and decimal SUMs, and any call
+    without ``schema``, keep the plain ``sum`` and its type."""
     if func == "AVG":
-        return F.sum(col[0]) / F.sum(col[1])
+        return _sum_column(col[0], schema) / F.sum(col[1])
+    if func == "SUM":
+        return _sum_column(col, schema)
     merged = MERGE[func](col)
     # COUNT re-agg is SUM of stored counts
     return merged.cast("long") if func == "COUNT" else merged
+
+
+def _exact_sum(col: str, schema: StructType | None) -> bool:
+    """Whether a SUM over stored ``col`` re-merges exactly: the column is a
+    ``double`` in ``schema``."""
+    return (
+        schema is not None
+        and col in schema.fieldNames()
+        and isinstance(schema[col].dataType, DoubleType)
+    )
+
+
+def _sum_column(col: str, schema: StructType | None) -> Column:
+    if _exact_sum(col, schema):
+        return F.expr(M.exact_sum_sql(_ident(col)))
+    return F.sum(col)
 
 
 def _ident(name: str) -> str:
@@ -1512,8 +1538,11 @@ def fold_word_bags(
     each plain partial taken from a layout row's first word only, so the
     row's measures count once. Level 2 groups by keys: the sum of
     ``bit_count`` (0 for a group with no word) and the same merge over the
-    partials. A decimal SUM widens at each level, so it is cast back to
-    its one-level type; every other output keeps that type already.
+    partials. A double SUM (an AVG's SUM half too) carries the exact-sum
+    state of :func:`merge_column` through both levels, so it gives the
+    join path's value. A decimal SUM widens at each level, so it is cast
+    back to its one-level type; every other output keeps that type
+    already.
 
     Each aggregate is one parsed SQL expression: the same trees spelled
     with the Column API cost several times the py4j round trips
@@ -1524,14 +1553,24 @@ def fold_word_bags(
         word = "__w.__mask" if cond is None else f"CASE WHEN ({cond}) THEN __w.__mask END"
         level1.append(f"bit_or({word}) AS __b{i}")
         level2.append(f"coalesce(sum(bit_count(__b{i})), 0) AS {_ident(name)}")
+    first_word = "__pos IS NULL OR __pos = 0"
     for i, (name, func, col) in enumerate(plain):
         stored = col if func == "AVG" else (col,)
-        fn = func.lower() if func in ("MIN", "MAX") else "sum"
-        level1 += [
-            f"{fn}(CASE WHEN __pos IS NULL OR __pos = 0 THEN {_ident(c)} END) AS __p{i}_{j}"
-            for j, c in enumerate(stored)
-        ]
-        merged = f"{fn}(__p{i}_0)"
+        merges = []
+        for j, c in enumerate(stored):
+            x, p = f"CASE WHEN {first_word} THEN {_ident(c)} END", f"__p{i}_{j}"
+            if j == 0 and func in ("SUM", "AVG") and _exact_sum(c, schema):
+                # the exact SUM's state re-merges at level 2, so the fold
+                # gives the join path's value
+                level1 += [f"{e} AS {p}_{k}" for k, e in enumerate(M.exact_sum_state(x))]
+                merges.append(M.exact_sum_final(
+                    [f"{fn}({p}_{k})" for k, fn in enumerate(M.EXACT_SUM_MERGE)]
+                ))
+            else:
+                fn = func.lower() if func in ("MIN", "MAX") else "sum"
+                level1.append(f"{fn}({x}) AS {p}")
+                merges.append(f"{fn}({p})")
+        merged = merges[0]
         t = schema[stored[0]].dataType if func in ("SUM", "AVG") else None
         if isinstance(t, DecimalType):
             widened = DecimalType(min(38, t.precision + 10), t.scale)
@@ -1539,7 +1578,7 @@ def fold_word_bags(
         if func == "COUNT":
             merged = f"CAST({merged} AS BIGINT)"
         elif func == "AVG":
-            merged = f"{merged} / sum(__p{i}_1)"
+            merged = f"{merged} / {merges[1]}"
         level2.append(f"{merged} AS {_ident(name)}")
     words = rows.groupBy(*keys, F.expr("__w.__bkt AS __bkt")).agg(*map(F.expr, level1))
     return words.groupBy(*keys).agg(*map(F.expr, level2))

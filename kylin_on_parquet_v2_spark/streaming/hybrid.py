@@ -22,9 +22,10 @@ segment value format (e.g. batch ``yyyy-MM-dd`` day dirs, realtime
 orders them consistently. Double counting is impossible by construction:
 the tail filter is strict (``> boundary``).
 
-Merge soundness: decomposable measures are served (SUM merges by SUM,
-COUNT by SUM, MIN/MAX by themselves; AVG by SUM/COUNT decomposition), and —
-round 6 — so are the cube's MERGEABLE-DISTINCT measures: COUNT_DISTINCT
+Merge soundness: decomposable measures are served (SUM merges by SUM, a
+double SUM exactly with one rounding (``router.merge_column``); COUNT by
+SUM, MIN/MAX by themselves; AVG by SUM/COUNT decomposition), and — round
+6 — so are the cube's MERGEABLE-DISTINCT measures: COUNT_DISTINCT
 backed by a dictionary-id word-bag bitmap, its conditional form, and
 INTERSECT_COUNT. The realtime tail is dictionary-encoded through an
 in-memory EXTENSION of the cube's frozen global dictionary
@@ -84,6 +85,7 @@ from kylin_on_parquet_v2_spark.query.router import (
     apply_post_aggregation,
     execute_route,
     join_counts,
+    merge_column,
     percentile_sketch,
     routed_layout_scan,
     set_projection,
@@ -515,10 +517,8 @@ def execute_hybrid(
             )
             fn = {"COUNT": F.count, "SUM": F.sum, "MIN": F.min, "MAX": F.max}[a.func]
             part_aggs.append(fn(src).alias(item.name))
-            merged = MERGE[a.func](item.name)
-            if a.func == "COUNT":
-                merged = merged.cast("long")
-            merge_aggs.append(merged.alias(item.name))
+            # a double SUM re-merges the unioned partials exactly
+            merge_aggs.append(merge_column(a.func, item.name, batch.schema).alias(item.name))
         # realtime partial aggregation at the SAME grain as the batch
         # partials, its types aligned to the batch side before the union
         rt_part = rt.groupBy(*G).agg(*part_aggs)
