@@ -178,58 +178,90 @@ def hist_percentile(func: FunctionDesc, col: Column, q: float) -> Column:
     return F.lit(lo) + (first["i"].cast("double") - F.lit(0.5)) * F.lit(w)
 
 
-#: how each column of an :func:`exact_sum_state` re-merges at a next level
-EXACT_SUM_MERGE = ("max", "sum", "sum", "sum")
-#: partials below 2**62 in magnitude sum exactly, on a grid of 2**-62
-_EXACT_SUM_BOUND = f"{2.0**62!r}D"
+#: partials on a grid of 2**-62 and below 2**62 in magnitude sum exactly
 _EXACT_SUM_SCALE = 2**62
+_SCALE_SQL = f"{float(_EXACT_SUM_SCALE)!r}D"
+_NAN_SQL = "CAST('NaN' AS DOUBLE)"
+
+
+def quote_ident(name: str) -> str:
+    """``name`` as a quoted SQL identifier (Spark's quoteIdentifier)."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def exact_sum_state(x: str) -> list[str]:
-    """The aggregated state of an exact double SUM over the SQL expression
-    ``x`` (stored or partial sums): ``max(abs(x))``, the plain ``sum(x)``,
-    and the sums of x's integer part and of its fraction times 2**62, each
-    cast to BIGINT (truncating toward zero) and summed as a decimal. Both
-    casts are exact below 2**62: ``x % 1`` of a double and its scaling by a
-    power of two are exact, so only a fraction's bits below 2**-62 are
-    dropped (a partial of 2**-10 or more in magnitude has none). The
-    decimal sums cannot overflow under 10**10 rows, so the state re-merges
-    column by column with :data:`EXACT_SUM_MERGE` and a two-level plan
-    sums exactly what a one-level plan does."""
+    """The three aggregates of an exact double SUM over the SQL expression
+    ``x`` (stored or partial sums): a range guard, the plain ``sum(x)``,
+    and the ``try_sum`` of x times 2**62 as a DECIMAL(38,0) integer.
+
+    The guard is ``max(abs(x))``, or NaN for a partial below 2**-10 in
+    magnitude with bits below 2**-62 (``x * 2**62`` not a whole number;
+    every larger partial lies on that grid). For a partial that passes it,
+    the scaled value is exact: x's integer part (``x`` truncated toward
+    zero) times 2**62, plus its fraction (``x`` minus the integer part)
+    times 2**62, a whole number below 2**62. A NaN, an infinity or a
+    partial of 2**63 or more gives NULL there, which the guard covers.
+    The decimal sum turns NULL once it passes DECIMAL(38,0), a running
+    sum of about 2.1e19 in magnitude."""
+    whole = f"try_cast({x} AS BIGINT)"
     return [
-        f"max(abs({x}))",
+        f"max(CASE WHEN abs({x}) < {2.0**-10!r}D AND {x} * {_SCALE_SQL} % 1D <> 0D"
+        f" THEN {_NAN_SQL} ELSE abs({x}) END)",
         f"sum({x})",
-        f"sum(CAST(try_cast({x} AS BIGINT) AS DECIMAL(19,0)))",
-        f"sum(CAST(try_cast({x} % 1D * {float(_EXACT_SUM_SCALE)!r}D AS BIGINT) AS DECIMAL(19,0)))",
+        f"try_sum(CAST({whole} AS DECIMAL(38,0)) * {_EXACT_SUM_SCALE}BD"
+        f" + CAST(({x} - {whole}) * {_SCALE_SQL} AS BIGINT))",
+    ]
+
+
+def exact_sum_remerge(state: list[str]) -> list[str]:
+    """The same three aggregates one level up, over the columns ``state``
+    of an aggregated :func:`exact_sum_state`: a decimal sum that turned
+    NULL below (it overflowed, or no partial passed the guard, which the
+    guard then shows) sets the guard to NaN, so a two-level plan gives
+    what a one-level plan gives."""
+    top, plain, scaled = state
+    return [
+        f"max(CASE WHEN {scaled} IS NULL AND {plain} IS NOT NULL THEN {_NAN_SQL} ELSE {top} END)",
+        f"sum({plain})",
+        f"try_sum({scaled})",
     ]
 
 
 def exact_sum_final(state: list[str]) -> str:
     """SQL of the double an aggregated :func:`exact_sum_state` stands for.
 
-    Exactness contract: when every partial is finite and below 2**62 in
-    magnitude, the state re-assembles the sum of the partials times 2**62
-    as one DECIMAL(38,0) integer, and the answer is that exact sum rounded
-    ONCE to double: the correctly rounded sum of the partials
+    Exactness contract: when every partial is finite, below 2**62 in
+    magnitude and a whole multiple of 2**-62 (every partial of 2**-10 or
+    more in magnitude is one), the state holds the sum of the partials
+    times 2**62 as one DECIMAL(38,0) integer, and the answer is that exact
+    sum rounded ONCE to double: the correctly rounded sum of the partials
     (``math.fsum``), whatever their order, partition count or segment
-    layout, after each partial's bits below 2**-62 are truncated. A NaN,
-    an infinity or a partial of 2**62 or more, and a sum of about 2.1e19
-    or more (past DECIMAL(38,0)), fall back to the plain ``sum`` in scan
-    order, so NaN and infinity keep Spark's semantics."""
-    top, plain, whole, frac = state
-    scaled = (
-        f"try_add(try_multiply(CAST({whole} AS DECIMAL(38,0)), {_EXACT_SUM_SCALE}BD), {frac})"
-    )
+    layout. Otherwise the answer is the plain ``sum`` in scan order: for a
+    NaN, an infinity, a partial of 2**62 or more, a partial with bits
+    below 2**-62 (such as 1e-20), and a running sum past DECIMAL(38,0)
+    (about 2.1e19 in magnitude). No bit of a partial is dropped, and NaN
+    and infinity keep Spark's semantics."""
+    top, plain, scaled = state
     return (
-        f"coalesce(CASE WHEN {top} < {_EXACT_SUM_BOUND}"
+        f"coalesce(CASE WHEN {top} < {_SCALE_SQL}"
         f" THEN CAST({scaled} AS DOUBLE) * {2.0**-62!r}D END, {plain})"
     )
 
 
-def exact_sum_sql(x: str) -> str:
-    """One-level exact double SUM of the SQL expression ``x`` (the
-    contract of :func:`exact_sum_final`)."""
-    return exact_sum_final(exact_sum_state(x))
+def is_exact_sum(col: str, schema: StructType) -> bool:
+    """Whether a SUM over the stored column ``col`` re-merges exactly
+    (:func:`sum_merge`): the column is a ``double`` in the layout's
+    ``schema``."""
+    return col in schema.fieldNames() and isinstance(schema[col].dataType, DoubleType)
+
+
+def sum_merge(col: str, schema: StructType) -> Column:
+    """One-level re-merge of the SUM partials stored in ``col``: exact for
+    a ``double`` column (the contract of :func:`exact_sum_final`), the
+    plain ``sum`` and its type for any other."""
+    if is_exact_sum(col, schema):
+        return F.expr(exact_sum_final(exact_sum_state(quote_ident(col))))
+    return F.sum(col)
 
 
 def topn_k(func: FunctionDesc) -> int:
@@ -315,8 +347,8 @@ def reagg_from_layout(measure: MeasureDesc, schema: StructType | None = None) ->
     over a decimal layout column re-casts to the stored type — otherwise
     each build layer widens precision again ((29,4) -> (38,4) -> ...), the
     exact creep CuboidAggregator.scala:125-132 exists to stop. SUM over a
-    double layout column re-merges exactly (:func:`exact_sum_final`), so a
-    child layout or a merged segment stores the exact sum of its parent's
+    double layout column re-merges exactly (:func:`sum_merge`), so a child
+    layout or a merged segment stores the exact sum of its parent's
     partials rounded once, whatever their scan order.
     """
     f = measure.function
@@ -324,12 +356,11 @@ def reagg_from_layout(measure: MeasureDesc, schema: StructType | None = None) ->
     if f.expression == "COUNT":
         return F.sum(name).cast("long").alias(name)
     if f.expression == "SUM":
-        dt = schema[name].dataType if schema is not None and name in schema.fieldNames() else None
-        if isinstance(dt, DoubleType):
-            return F.expr(exact_sum_sql("`" + name.replace("`", "``") + "`")).alias(name)
-        out = F.sum(name)
-        if isinstance(dt, DecimalType):
-            out = out.cast(dt)
+        if schema is None:
+            return F.sum(name).alias(name)
+        out = sum_merge(name, schema)
+        if name in schema.fieldNames() and isinstance(schema[name].dataType, DecimalType):
+            out = out.cast(schema[name].dataType)
         return out.alias(name)
     if f.expression == "MIN":
         return F.min(name).alias(name)

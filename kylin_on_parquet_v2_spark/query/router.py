@@ -30,7 +30,7 @@ from functools import partial
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DecimalType, DoubleType, StructType
+from pyspark.sql.types import DecimalType, StructType
 
 from kylin_on_parquet_v2_spark.cube import dictionary as GD
 from kylin_on_parquet_v2_spark.cube import measures as M
@@ -1478,49 +1478,30 @@ def execute_route(
     return apply_post_aggregation(digest, result)
 
 
-def merge_column(func: str, col, schema: StructType | None = None) -> Column:
+def merge_column(func: str, col, schema: StructType) -> Column:
     """One-level re-aggregate of a MERGE-family output over its stored
-    column (an AVG's ``col`` is its (SUM, COUNT) measure pair).
+    column (an AVG's ``col`` is its (SUM, COUNT) measure pair) of a layout
+    whose schema is ``schema``.
 
-    A SUM, or an AVG's SUM half, over a stored ``double`` column (its type
-    read from ``schema``, the layout's schema) re-merges the partials
-    EXACTLY and rounds once (``measures.exact_sum_final``): the answer is
-    the correctly rounded sum of the partials (``math.fsum``), the same for
-    any scan order, partition count or segment layout, and stays
-    ``double``. A partial's bits below 2**-62 are truncated first (only a
-    partial under 2**-10 in magnitude has any). A NaN, an infinity or a
-    partial of 2**62 or more in magnitude, or a sum of about 2.1e19 or
-    more, falls back to the scan-order ``sum``, so NaN and infinity keep
-    Spark's semantics. Integer, long and decimal SUMs, and any call
-    without ``schema``, keep the plain ``sum`` and its type."""
+    A SUM, or an AVG's SUM half, re-merges with ``measures.sum_merge``:
+    over a stored ``double`` column the partials are summed EXACTLY and
+    rounded once, so the answer is the correctly rounded sum of the
+    partials (``math.fsum``), the same for any scan order, partition count
+    or segment layout, and stays ``double``. That holds when every partial
+    is finite, below 2**62 in magnitude and a whole multiple of 2**-62
+    (every partial of 2**-10 or more in magnitude is one); a NaN, an
+    infinity, a partial of 2**62 or more, a partial with bits below 2**-62
+    (such as 1e-20), or a sum of about 2.1e19 or more, gives the
+    scan-order ``sum`` instead, so NaN and infinity keep Spark's
+    semantics. Integer, long and decimal SUMs keep the plain ``sum`` and
+    its type."""
     if func == "AVG":
-        return _sum_column(col[0], schema) / F.sum(col[1])
+        return M.sum_merge(col[0], schema) / F.sum(col[1])
     if func == "SUM":
-        return _sum_column(col, schema)
+        return M.sum_merge(col, schema)
     merged = MERGE[func](col)
     # COUNT re-agg is SUM of stored counts
     return merged.cast("long") if func == "COUNT" else merged
-
-
-def _exact_sum(col: str, schema: StructType | None) -> bool:
-    """Whether a SUM over stored ``col`` re-merges exactly: the column is a
-    ``double`` in ``schema``."""
-    return (
-        schema is not None
-        and col in schema.fieldNames()
-        and isinstance(schema[col].dataType, DoubleType)
-    )
-
-
-def _sum_column(col: str, schema: StructType | None) -> Column:
-    if _exact_sum(col, schema):
-        return F.expr(M.exact_sum_sql(_ident(col)))
-    return F.sum(col)
-
-
-def _ident(name: str) -> str:
-    """``name`` as a quoted SQL identifier (Spark's quoteIdentifier)."""
-    return "`" + name.replace("`", "``") + "`"
 
 
 def fold_word_bags(
@@ -1547,24 +1528,25 @@ def fold_word_bags(
     Each aggregate is one parsed SQL expression: the same trees spelled
     with the Column API cost several times the py4j round trips
     (``hist_reagg`` makes the same trade)."""
-    rows = df.selectExpr("*", f"posexplode_outer({_ident(bags[0][1])}) AS (__pos, __w)")
+    rows = df.selectExpr("*", f"posexplode_outer({M.quote_ident(bags[0][1])}) AS (__pos, __w)")
     level1, level2 = [], []
     for i, (name, _, cond) in enumerate(bags):
         word = "__w.__mask" if cond is None else f"CASE WHEN ({cond}) THEN __w.__mask END"
         level1.append(f"bit_or({word}) AS __b{i}")
-        level2.append(f"coalesce(sum(bit_count(__b{i})), 0) AS {_ident(name)}")
+        level2.append(f"coalesce(sum(bit_count(__b{i})), 0) AS {M.quote_ident(name)}")
     first_word = "__pos IS NULL OR __pos = 0"
     for i, (name, func, col) in enumerate(plain):
         stored = col if func == "AVG" else (col,)
         merges = []
         for j, c in enumerate(stored):
-            x, p = f"CASE WHEN {first_word} THEN {_ident(c)} END", f"__p{i}_{j}"
-            if j == 0 and func in ("SUM", "AVG") and _exact_sum(c, schema):
+            x, p = f"CASE WHEN {first_word} THEN {M.quote_ident(c)} END", f"__p{i}_{j}"
+            if j == 0 and func in ("SUM", "AVG") and M.is_exact_sum(c, schema):
                 # the exact SUM's state re-merges at level 2, so the fold
                 # gives the join path's value
-                level1 += [f"{e} AS {p}_{k}" for k, e in enumerate(M.exact_sum_state(x))]
+                state = M.exact_sum_state(x)
+                level1 += [f"{e} AS {p}_{k}" for k, e in enumerate(state)]
                 merges.append(M.exact_sum_final(
-                    [f"{fn}({p}_{k})" for k, fn in enumerate(M.EXACT_SUM_MERGE)]
+                    M.exact_sum_remerge([f"{p}_{k}" for k in range(len(state))])
                 ))
             else:
                 fn = func.lower() if func in ("MIN", "MAX") else "sum"
@@ -1579,7 +1561,7 @@ def fold_word_bags(
             merged = f"CAST({merged} AS BIGINT)"
         elif func == "AVG":
             merged = f"{merged} / {merges[1]}"
-        level2.append(f"{merged} AS {_ident(name)}")
+        level2.append(f"{merged} AS {M.quote_ident(name)}")
     words = rows.groupBy(*keys, F.expr("__w.__bkt AS __bkt")).agg(*map(F.expr, level1))
     return words.groupBy(*keys).agg(*map(F.expr, level2))
 

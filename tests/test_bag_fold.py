@@ -190,7 +190,9 @@ def test_fold_keeps_null_and_empty_bags_and_decimal_types(spark):
     ]
     folded = fold_word_bags(layout, ["k"], [("nd", "bm", None)], plain, layout.schema)
     joined = join_counts(
-        layout.groupBy("k").agg(*[merge_column(f, c).alias(n) for n, f, c in plain]),
+        layout.groupBy("k").agg(
+            *[merge_column(f, c, layout.schema).alias(n) for n, f, c in plain]
+        ),
         GD.bitmap_count(layout, ["k"], name="bm", alias="nd"),
         ["k"], "nd", 0,
     )

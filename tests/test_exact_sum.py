@@ -4,10 +4,10 @@ A routed answer re-merges per-row SUM partials of a layout. A plain double
 ``sum`` of them depends on scan order, so the partition count or segment
 layout could pick the last bit (and with it a rounded cent). Every re-merge
 of double SUM partials sums them exactly and rounds once: the answer
-equals ``math.fsum`` of the partials however they are read. Out of range
-partials (NaN, infinities, 2**62 and more) and sums past DECIMAL(38,0)
-give what ``sum`` gives. These cases run over hand-made layout frames; no
-cube is built.
+equals ``math.fsum`` of the partials however they are read. Partials off
+the exact range (NaN, infinities, 2**62 and more, bits below 2**-62) and
+sums past DECIMAL(38,0) give what ``sum`` gives. These cases run over
+hand-made layout frames; no cube is built.
 """
 
 from __future__ import annotations
@@ -96,6 +96,33 @@ def test_out_of_range_partials_fall_back_to_sum(spark, values):
     got = _one(df, merge_column("SUM", "s", df.schema))
     want = _one(df, F.sum("s"))
     assert (got is None and want is None) or got == want or (math.isnan(got) and math.isnan(want))
+
+
+@pytest.mark.parametrize(
+    "values",
+    [[1e-20] * 10, [1.0, 1e-20, 3.0, -2.5e-30], [2.0**-63, 2.0**-63, 1.0]],
+    ids=["tiny", "mixed-tiny", "half-grid"],
+)
+def test_partials_below_the_grid_fall_back_to_sum(spark, values):
+    """A partial with bits below 2**-62 is not truncated: its whole group
+    takes the plain sum, which keeps those bits (ten 1e-20 partials sum to
+    about 1e-19, not to 0)."""
+    df = _layouts(spark, values)[0]
+    got = _one(df, merge_column("SUM", "s", df.schema))
+    assert got == _one(df, F.sum("s"))
+    assert got == pytest.approx(math.fsum(values), rel=1e-15)
+    m = MeasureDesc("s", FunctionDesc("SUM", "x"))
+    assert _one(df, reagg_from_layout(m, df.schema)) == got
+
+
+def test_tiny_partials_on_the_grid_stay_exact(spark):
+    """A partial below 2**-10 whose bits all lie on the 2**-62 grid still
+    sums exactly: 2**-62 survives beside 1.0 and -1.0, where the
+    scan-order sum rounds it away."""
+    values = [2.0**-62, 1.0, -1.0, 2.0**-40]
+    got = {_one(df, merge_column("SUM", "s", df.schema)) for df in _layouts(spark, values)}
+    assert got == {math.fsum(values)} == {2.0**-62 + 2.0**-40}
+    assert _one(_layouts(spark, values)[0], F.sum("s")) != math.fsum(values)
 
 
 def test_null_partials_are_skipped(spark):
