@@ -215,10 +215,10 @@ def exact_sum_state(x: str) -> list[str]:
 
 def exact_sum_remerge(state: list[str]) -> list[str]:
     """The same three aggregates one level up, over the columns ``state``
-    of an aggregated :func:`exact_sum_state`: a decimal sum that turned
-    NULL below (it overflowed, or no partial passed the guard, which the
-    guard then shows) sets the guard to NaN, so a two-level plan gives
-    what a one-level plan gives."""
+    of an aggregated :func:`exact_sum_state`. ``try_sum`` skips a NULL, so
+    a decimal sum that turned NULL below (it overflowed, or each partial
+    under it was one that the guard already rejects) sets the guard to
+    NaN: a two-level plan gives what a one-level plan gives."""
     top, plain, scaled = state
     return [
         f"max(CASE WHEN {scaled} IS NULL AND {plain} IS NOT NULL THEN {_NAN_SQL} ELSE {top} END)",
