@@ -1491,7 +1491,7 @@ def merge_column(func: str, col, schema: StructType) -> Column:
     is finite, below 2**62 in magnitude and a whole multiple of 2**-62
     (every partial of 2**-10 or more in magnitude is one); a NaN, an
     infinity, a partial of 2**62 or more, a partial with bits below 2**-62
-    (such as 1e-20), or a sum of about 2.1e19 or more, gives the
+    (such as 1e-20), or a running sum past about 2.1e19, gives the
     scan-order ``sum`` instead, so NaN and infinity keep Spark's
     semantics. Integer, long and decimal SUMs keep the plain ``sum`` and
     its type."""
