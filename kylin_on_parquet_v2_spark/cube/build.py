@@ -260,6 +260,8 @@ class CubeInstance:
     #: the current epoch's entries are kept. These are lazy plans: no
     #: rows are collected or persisted, and each query re-reads the files
     _scans: dict = field(default_factory=dict, repr=False)
+    #: model column -> its type in the flat table (see source_type)
+    _source_types: dict = field(default_factory=dict, repr=False)
 
     def layout_df(self, spark: SparkSession, cuboid: Cuboid) -> DataFrame:
         """The layout's scan, READY-pruned on a segmented cube; one
@@ -272,6 +274,15 @@ class CubeInstance:
             scans[key] = df
             self._scans = scans
         return df
+
+    def source_type(self, spark: SparkSession, col: str):
+        """The type of model column ``col`` in the flat table the cube is
+        built from, analyzed once per column and instance."""
+        t = self._source_types.get(col)
+        if t is None:
+            flat = self.model.flat_table(spark, columns=[col])
+            t = self._source_types[col] = flat.schema[col].dataType
+        return t
 
     def _ready_scan(self, spark: SparkSession, cuboid: Cuboid) -> DataFrame:
         df = self._layout_df_raw(spark, cuboid)

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from kylin_on_parquet_v2_spark.cube.build import CubeBuilder, CubeInstance
 from kylin_on_parquet_v2_spark.metadata.cube import CubeDesc
 from kylin_on_parquet_v2_spark.metadata.model import DataModel
+from kylin_on_parquet_v2_spark.query import router
 from kylin_on_parquet_v2_spark.query.digest import (
     AggOverUnion,
     JoinOfAggregates,
@@ -47,6 +48,17 @@ def _exc_reason(exc: Exception) -> str:
     """An exception as a one-line reason: its class and first line."""
     first = (str(exc).splitlines() or [""])[0]
     return f"{type(exc).__name__}: {first}"[:200]
+
+
+def _scan_line(route: Route, inst: CubeInstance) -> str:
+    """The route's layout-scan decision, as ``explain()`` prints it."""
+    rows = inst.layout_rows.get(route.cuboid.cuboid_id)
+    bound = router.ONE_PARTITION_ROWS
+    if route.one_partition:
+        return f"scan: one partition (layout rows {rows} <= {bound})"
+    if rows is None:
+        return "scan: Spark's file splits (no recorded layout rows)"
+    return f"scan: Spark's file splits (layout rows {rows} > {bound})"
 
 
 @dataclass(frozen=True)
@@ -879,6 +891,8 @@ class OlapEngine:
             if route is not None
             else "route: none (pushdown — plain spark.sql)"
         )
+        if route is not None:
+            head += "\n" + _scan_line(route, self.cubes[route.cube])
         if len(self.last_routes) > 1:
             head += (
                 f"\nmulti-context: {len(self.last_routes)} islands -> "

@@ -52,6 +52,15 @@ from kylin_on_parquet_v2_spark.query.time_rewrite import rewrite_time_grains
 #: same COUNT->SUM rule when re-aggregating a child layout from a parent)
 MERGE = {"COUNT": F.sum, "SUM": F.sum, "MIN": F.min, "MAX": F.max}
 
+#: a routed layout of at most this many recorded rows is read as ONE
+#: partition, so every aggregation above its scan finds its required
+#: distribution already met and the read runs as one Spark stage, with no
+#: shuffle (the reference sizes each query's parallelism from its scanned
+#: bytes the same way: ResultPlan.scala:42,67-73,
+#: ResetShufflePartition.scala:43-57). Above it, or with no recorded
+#: count, the scan keeps Spark's file splits.
+ONE_PARTITION_ROWS = 100_000
+
 
 @dataclass
 class Route:
@@ -123,6 +132,9 @@ class Route:
     #: event-time expressions (TimeDerivedColumnType parity) — observability
     #: only; empty when the digest needed no rewrite
     time_rewritten: tuple[str, ...] = ()
+    #: the layout's recorded row count is at most ONE_PARTITION_ROWS:
+    #: routed_layout_scan reads it as one partition
+    one_partition: bool = False
 
 
 def _match_joins(digest: SqlDigest, inst: CubeInstance) -> bool:
@@ -793,6 +805,8 @@ def plan_route(
     route = _plan_route_rewritten(digest, inst, approx_distinct, approx_topn)
     if route is not None:
         route.time_rewritten = tuple(getattr(digest, "_time_rewritten", ()))
+        rows = inst.layout_rows.get(route.cuboid.cuboid_id)
+        route.one_partition = rows is not None and rows <= ONE_PARTITION_ROWS
     return route
 
 
@@ -1219,7 +1233,8 @@ def routed_layout_scan(
     derived recovery, query filter, grouping expressions. Shared by
     execute_route and the hybrid realization (which needs the filtered
     layout rows — e.g. stored bitmap word-bags — as MERGE PARTIALS rather
-    than finalized aggregates)."""
+    than finalized aggregates). A route marked ``one_partition`` reads the
+    layout as one partition."""
     digest = rewrite_time_grains(digest, inst)
     df = inst.layout_df(spark, route.cuboid)
     # column presence and types come from the recorded layout schema, not
@@ -1288,6 +1303,10 @@ def routed_layout_scan(
     # the ordinary groupBy/projection paths below
     for gname, (gsql, _bases) in digest.group_exprs.items():
         df = df.withColumn(gname, F.expr(gsql))
+    if route.one_partition:
+        # SinglePartition satisfies every distribution an aggregation above
+        # asks for, so no Exchange is planned: one stage, one job
+        df = df.coalesce(1)
     return df
 
 
@@ -1356,6 +1375,9 @@ def execute_route(
         # INTERSECT_VALUE renders "" per valueResult's empty-result contract)
         intersect_bags: list[tuple] = []
         value_bags: list[tuple] = []
+        # AVG output -> its decimal type (see avg_type); absent otherwise
+        avg_types: dict = {}
+        schema = inst.layout_schemas[route.cuboid.cuboid_id]
         for item in digest.select:
             if item.group_col is not None or item.grouping_of is not None:
                 continue
@@ -1405,6 +1427,9 @@ def execute_route(
                 s = _measure_for(AggCall("SUM", agg.column, False, "", agg.expr_sql), inst)
                 c = _measure_for(AggCall("COUNT", agg.column, False, "", agg.expr_sql), inst)
                 plain.append((item.name, "AVG", (s.name, c.name)))
+                t = avg_type(inst, spark, agg, schema)
+                if t is not None:
+                    avg_types[item.name] = t
             elif item.name in route.dim_served:
                 # dimension-as-measure: min/max straight over the layout's
                 # dim values (no stored measure involved)
@@ -1421,12 +1446,14 @@ def execute_route(
             and not value_bags
             and all(func is not None for _, func, _ in plain)
         )
-        schema = inst.layout_schemas[route.cuboid.cuboid_id]
         if fold:
             agg_cols, bag_counts = [], []
         else:
             agg_cols = [
-                (col if func is None else merge_column(func, col, schema)).alias(name)
+                (
+                    col if func is None
+                    else merge_column(func, col, schema, avg_types.get(name))
+                ).alias(name)
                 for name, func, col in plain
             ]
             bag_counts = [
@@ -1458,7 +1485,7 @@ def execute_route(
         for gset in sets:
             keys = list(gset)
             if fold:
-                branch = fold_word_bags(df, keys, word_bags, plain, schema)
+                branch = fold_word_bags(df, keys, word_bags, plain, schema, avg_types)
             elif agg_cols:
                 branch = df.groupBy(*keys).agg(*agg_cols)
             elif keys or not bag_counts:
@@ -1469,7 +1496,13 @@ def execute_route(
             else:
                 branch = None  # global set whose only aggs are bag-served
             for name, counts, empty in bag_counts:
-                branch = join_counts(branch, counts(keys), keys, name, empty)
+                frame = counts(keys)
+                if route.one_partition:
+                    # both join sides are one partition, so a shuffled
+                    # join needs no exchange, where a broadcast of the
+                    # counts would run as its own job
+                    frame = frame.hint("shuffle_hash")
+                branch = join_counts(branch, frame, keys, name, empty)
             branches.append(branch.select(*set_projection(digest, gset, df, types)))
         result = branches[0]
         for b in branches[1:]:
@@ -1478,7 +1511,9 @@ def execute_route(
     return apply_post_aggregation(digest, result)
 
 
-def merge_column(func: str, col, schema: StructType) -> Column:
+def merge_column(
+    func: str, col, schema: StructType, avg_type: DecimalType | None = None
+) -> Column:
     """One-level re-aggregate of a MERGE-family output over its stored
     column (an AVG's ``col`` is its (SUM, COUNT) measure pair) of a layout
     whose schema is ``schema``.
@@ -1493,19 +1528,69 @@ def merge_column(func: str, col, schema: StructType) -> Column:
     infinity, a partial of 2**62 or more, a partial with bits below 2**-62
     (such as 1e-20), or a running sum past about 2.1e19, gives the
     scan-order ``sum`` instead, so NaN and infinity keep Spark's
-    semantics. Integer, long and decimal SUMs keep the plain ``sum`` and
-    its type."""
+    semantics. Integer and long SUMs keep the plain ``sum`` and its type;
+    a decimal SUM is cast back to its stored type, which is pushdown's
+    SUM type. An AVG whose ``avg_type`` is given (see :func:`avg_type`)
+    divides as Spark's decimal ``Average`` does."""
     if func == "AVG":
-        return M.sum_merge(col[0], schema) / F.sum(col[1])
+        return divide_avg(merge_column("SUM", col[0], schema), F.sum(col[1]), avg_type)
     if func == "SUM":
-        return M.sum_merge(col, schema)
+        t = schema[col].dataType
+        merged = M.sum_merge(col, schema)
+        return merged.cast(t) if isinstance(t, DecimalType) else merged
     merged = MERGE[func](col)
     # COUNT re-agg is SUM of stored counts
     return merged.cast("long") if func == "COUNT" else merged
 
 
+#: the type Spark's ``Average`` divides a decimal sum by its count in
+_AVG_COUNT = DecimalType(20, 0)
+
+
+def divide_avg(total: Column, count: Column, avg_type: DecimalType | None) -> Column:
+    """An AVG from its merged SUM and COUNT: ``total / count``, or for a
+    decimal ``avg_type`` the value Spark's ``Average`` gives, the quotient
+    of the sum by the count as ``decimal(20, 0)``, rounded half up to
+    ``avg_type``.
+
+    Spark types a decimal quotient in at most 38 digits, so ``total /
+    count`` of a wide sum keeps fewer decimals than ``avg_type`` asks
+    (over a ``decimal(30, 4)`` source, 6 of 8) and would round twice. The
+    quotient is therefore split at the remainder ``r = total % count``:
+    the whole part ``(total - r) / count`` is an integer, and the fraction
+    ``r / count`` keeps 18 decimals, since ``|r| < count``. Both share the
+    sign of the sum, so rounding the fraction rounds the quotient. Exact
+    for a source ``decimal(p, s)`` with p <= 33 and s <= 14."""
+    if avg_type is None:
+        return total / count
+    n = count.cast(_AVG_COUNT)
+    r = total % n
+    return (((total - r) / n).cast(avg_type) + (r / n).cast(avg_type)).cast(avg_type)
+
+
+def avg_type(
+    inst: CubeInstance, spark, agg: AggCall, schema: StructType
+) -> DecimalType | None:
+    """The type of the routed AVG call ``agg`` over a layout whose schema
+    is ``schema``: None (``sum / count``) unless its stored SUM is decimal,
+    else Spark's AVG type over the source ``decimal(p, s)`` column,
+    ``decimal(p + 4, s + 4)`` (``Average.resultType``). ``p`` is the source
+    column's, read from the model's flat table: the stored precision
+    ``p + 10`` is capped at 38."""
+    total = _measure_for(AggCall("SUM", agg.column, False, "", agg.expr_sql), inst)
+    if not isinstance(schema[total.name].dataType, DecimalType):
+        return None
+    src = inst.source_type(spark, total.function.parameter)
+    return DecimalType(min(38, src.precision + 4), min(38, src.scale + 4))
+
+
 def fold_word_bags(
-    df: DataFrame, keys: list, bags: list, plain: list, schema: StructType
+    df: DataFrame,
+    keys: list,
+    bags: list,
+    plain: list,
+    schema: StructType,
+    avg_types: dict | None = None,
 ) -> DataFrame:
     """One grouping set whose bag outputs all read ONE word-bag column,
     beside only MERGE-family outputs, as one two-level aggregation of the
@@ -1522,8 +1607,9 @@ def fold_word_bags(
     partials. A double SUM (an AVG's SUM half too) carries the exact-sum
     state of :func:`merge_column` through both levels, so it gives the
     join path's value. A decimal SUM widens at each level, so it is cast
-    back to its one-level type; every other output keeps that type
-    already.
+    back to its stored type, as :func:`merge_column` does, and an AVG
+    named in ``avg_types`` divides as there; every other output keeps its
+    one-level type already.
 
     Each aggregate is one parsed SQL expression: the same trees spelled
     with the Column API cost several times the py4j round trips
@@ -1533,7 +1619,7 @@ def fold_word_bags(
     for i, (name, _, cond) in enumerate(bags):
         word = "__w.__mask" if cond is None else f"CASE WHEN ({cond}) THEN __w.__mask END"
         level1.append(f"bit_or({word}) AS __b{i}")
-        level2.append(f"coalesce(sum(bit_count(__b{i})), 0) AS {M.quote_ident(name)}")
+        level2.append(F.expr(f"coalesce(sum(bit_count(__b{i})), 0) AS {M.quote_ident(name)}"))
     first_word = "__pos IS NULL OR __pos = 0"
     for i, (name, func, col) in enumerate(plain):
         stored = col if func == "AVG" else (col,)
@@ -1555,15 +1641,18 @@ def fold_word_bags(
         merged = merges[0]
         t = schema[stored[0]].dataType if func in ("SUM", "AVG") else None
         if isinstance(t, DecimalType):
-            widened = DecimalType(min(38, t.precision + 10), t.scale)
-            merged = f"CAST({merged} AS {widened.simpleString()})"
+            merged = f"CAST({merged} AS {t.simpleString()})"
         if func == "COUNT":
             merged = f"CAST({merged} AS BIGINT)"
+        elif func == "AVG" and name in (avg_types or {}):
+            total, count = F.expr(merged), F.expr(merges[1])
+            level2.append(divide_avg(total, count, avg_types[name]).alias(name))
+            continue
         elif func == "AVG":
             merged = f"{merged} / {merges[1]}"
-        level2.append(f"{merged} AS {M.quote_ident(name)}")
+        level2.append(F.expr(f"{merged} AS {M.quote_ident(name)}"))
     words = rows.groupBy(*keys, F.expr("__w.__bkt AS __bkt")).agg(*map(F.expr, level1))
-    return words.groupBy(*keys).agg(*map(F.expr, level2))
+    return words.groupBy(*keys).agg(*level2)
 
 
 def join_counts(branch, counts: DataFrame, keys: list, name: str, empty) -> DataFrame:
@@ -1592,8 +1681,8 @@ def set_projection(
     into the caller's ``types`` memo only when some set first needs it (a
     plain GROUP BY never does); GROUPING(col) is a per-set literal, 0 when
     grouped and 1 when aggregated away (AggregatePlan.scala:169-174).
-    ``avg_parts`` maps an AVG output to the merged SUM/COUNT partial columns
-    it divides."""
+    ``avg_parts`` maps an AVG output to its Column over the merged SUM and
+    COUNT partials (see :func:`divide_avg`)."""
     out = []
     for item in digest.select:
         if item.group_col is not None and item.group_col in gset:
@@ -1606,8 +1695,7 @@ def set_projection(
             grouped = 0 if item.grouping_of in gset else 1
             out.append(F.lit(grouped).cast("tinyint").alias(item.name))
         elif avg_parts and item.name in avg_parts:
-            sa, ca = avg_parts[item.name]
-            out.append((F.col(sa) / F.col(ca)).alias(item.name))
+            out.append(avg_parts[item.name].alias(item.name))
         else:
             out.append(F.col(item.name))
     return out

@@ -71,7 +71,7 @@ import os
 from dataclasses import dataclass
 from functools import partial
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kylin_on_parquet_v2_spark import fs as FS
@@ -83,6 +83,8 @@ from kylin_on_parquet_v2_spark.query.router import (
     Route,
     apply_derived_joins,
     apply_post_aggregation,
+    avg_type,
+    divide_avg,
     execute_route,
     join_counts,
     merge_column,
@@ -478,7 +480,8 @@ def execute_hybrid(
     core.window_exprs, core.window_projects = [], []
     core.hidden = []
     core.select = [SelectItem(name=c, group_col=c) for c in G]
-    avg_parts: dict[str, tuple[str, str]] = {}
+    avg_parts: dict[str, Column] = {}
+    schema = inst.layout_schemas[route.cuboid.cuboid_id]
     bag_items: list[SelectItem] = []
     pct_by_col: dict[str, list[SelectItem]] = {}
     dd_items: list[SelectItem] = []  # dim-served COUNT DISTINCT
@@ -495,7 +498,8 @@ def execute_hybrid(
         elif a.func == "AVG":
             i = len(avg_parts)
             sa, ca = f"__avs{i}", f"__avc{i}"
-            avg_parts[item.name] = (sa, ca)
+            t = avg_type(inst, spark, a, schema)
+            avg_parts[item.name] = divide_avg(F.col(sa), F.col(ca), t)
             core.select.append(
                 SelectItem(name=sa, agg=AggCall("SUM", a.column, False, sa, a.expr_sql))
             )

@@ -20,6 +20,7 @@ from pyspark.sql.types import DecimalType
 
 from kylin_on_parquet_v2_spark.cube import dictionary as GD
 from kylin_on_parquet_v2_spark.datasets import TPCH_CUBE, TPCH_MODEL
+from kylin_on_parquet_v2_spark.query import router
 from kylin_on_parquet_v2_spark.query.engine import OlapEngine
 from kylin_on_parquet_v2_spark.query.router import (
     fold_word_bags,
@@ -135,15 +136,25 @@ def _jobs(spark, run) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-@pytest.mark.parametrize(
-    "outputs", ["count(distinct l_partkey) as nd",
+_BAG_OUTPUTS = ["count(distinct l_partkey) as nd",
                 "count(distinct l_partkey) as nd, count(*) as n"]
+
+
+@pytest.mark.parametrize(
+    "outputs, bound, jobs",
+    [pytest.param(o, None, 1, id=o) for o in _BAG_OUTPUTS]
+    + [pytest.param(o, 0, 3, id=f"{o}-bound0") for o in _BAG_OUTPUTS],
 )
-def test_bag_read_runs_three_jobs(spark, engine, outputs):
-    """A bag-served read is three Spark jobs: the two aggregation shuffles
-    and the result. The join path ran five (a dims-only branch, the bag
-    pipeline's two shuffles, the broadcast and the result). A memo replay
-    of the frozen plan runs the same three."""
+def test_bag_read_runs_three_jobs(spark, engine, monkeypatch, outputs, bound, jobs):
+    """A bag-served read of a layout read as one partition (at most
+    ``router.ONE_PARTITION_ROWS`` rows, the default here) is one Spark
+    job: both fold levels run in the scan's stage. With the bound at 0 it
+    is three: the two aggregation shuffles and the result; the join path
+    ran five (a dims-only branch, the bag pipeline's two shuffles, the
+    broadcast and the result). A memo replay of the frozen plan runs as
+    many jobs as the cold read."""
+    if bound is not None:
+        monkeypatch.setattr(router, "ONE_PARTITION_ROWS", bound)
     # a text no other test issues, so the first read plans cold
     sql = (
         f"select l_linestatus, {outputs} from lineitem "
@@ -154,7 +165,7 @@ def test_bag_read_runs_three_jobs(spark, engine, outputs):
     hits = engine.metrics["route_memo_hits"]
     replay = _jobs(spark, lambda: engine.sql(sql).collect())
     assert engine.metrics["route_memo_hits"] == hits + 1
-    assert (cold, replay) == (3, 3)
+    assert (cold, replay) == (jobs, jobs)
 
 
 def test_fold_keeps_null_and_empty_bags_and_decimal_types(spark):
@@ -198,7 +209,7 @@ def test_fold_keeps_null_and_empty_bags_and_decimal_types(spark):
     )
     joined = joined.select(*folded.columns)
     assert folded.dtypes == joined.dtypes
-    assert dict(folded.dtypes)["s"] == "decimal(38,4)"
+    assert dict(folded.dtypes)["s"] == "decimal(29,4)"
     assert sorted(folded.collect(), key=str) == sorted(joined.collect(), key=str)
 
     truth = {

@@ -15,6 +15,7 @@ from kylin_on_parquet_v2_spark.metadata import (
     FunctionDesc,
     MeasureDesc,
 )
+from kylin_on_parquet_v2_spark.query import router
 from kylin_on_parquet_v2_spark.query.engine import OlapEngine
 from tests.conftest import SF_SMOKE
 
@@ -67,7 +68,15 @@ def _routed_plan(eng, sql):
     return df, df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_bucketed_route_elides_shard_key_exchange(engines):
+@pytest.fixture
+def distributed(monkeypatch):
+    """Plan the routed reads with Spark's file splits: these layouts are
+    small enough to be read as one partition, which needs no exchange
+    whether the layout is bucketed or not."""
+    monkeypatch.setattr(router, "ONE_PARTITION_ROWS", 0)
+
+
+def test_bucketed_route_elides_shard_key_exchange(engines, distributed):
     eng_b, eng_p = engines
     df_b, plan_b = _routed_plan(eng_b, SQL)
     assert eng_b.cubes["bl_cube_bucketed"].layout_tables, "expected bucketed tables"
@@ -102,7 +111,7 @@ def test_bucketed_exact_hit_and_filters_still_work(engines):
     assert got == exp
 
 
-def test_bucketed_island_join_colocated(engines):
+def test_bucketed_island_join_colocated(engines, distributed):
     """Two routed aggregate islands joined on the shard key: both sides
     come back bucket-partitioned, so the JOIN itself needs no exchange on
     either input."""
@@ -136,7 +145,7 @@ def test_bucket_layouts_requires_shard_by():
         )
 
 
-def test_bucketed_segmented_incremental_append(spark, tmp_path_factory):
+def test_bucketed_segmented_incremental_append(spark, tmp_path_factory, distributed):
     """Bucketed layouts on a SEGMENTED cube: the segment dirs partition the
     bucketed table, incremental builds APPEND new segment dirs through the
     same table spec, and the shard-key re-agg stays exchange-free over the
@@ -196,7 +205,7 @@ def test_bucketed_segmented_incremental_append(spark, tmp_path_factory):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
-def test_bucketed_segment_refresh(spark, tmp_path_factory):
+def test_bucketed_segment_refresh(spark, tmp_path_factory, distributed):
     """Segment REFRESH on a bucket_layouts cube (r11 What's-missing #3):
     the staged segment writes through a SIDE table with the same bucket
     spec, its bucket-id file names survive the dir swap, and afterwards

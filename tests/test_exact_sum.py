@@ -138,9 +138,11 @@ def test_integer_long_and_decimal_sums_keep_their_types(spark):
         *[merge_column("SUM", c, df.schema).alias(c) for c in ("i", "l", "d")],
         merge_column("AVG", ("d", "l"), df.schema).alias("a"),
     )
+    # a decimal SUM is cast back to its stored type, pushdown's SUM type
+    stored_sum = F.sum("d").cast(DecimalType(19, 4))
     plain = df.groupBy("k").agg(
-        F.sum("i").alias("i"), F.sum("l").alias("l"), F.sum("d").alias("d"),
-        (F.sum("d") / F.sum("l")).alias("a"),
+        F.sum("i").alias("i"), F.sum("l").alias("l"), stored_sum.alias("d"),
+        (stored_sum / F.sum("l")).alias("a"),
     )
     assert out.dtypes == plain.dtypes
     assert out.collect() == plain.collect()

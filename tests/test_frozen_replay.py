@@ -25,6 +25,7 @@ from kylin_on_parquet_v2_spark.datasets import (
     TPCH_MODEL_SEG,
 )
 from kylin_on_parquet_v2_spark.query import engine as engine_mod
+from kylin_on_parquet_v2_spark.query import router
 from kylin_on_parquet_v2_spark.query.engine import OlapEngine
 from tests.conftest import SF_SMOKE, clone_cube_store
 
@@ -90,7 +91,9 @@ def test_replay_is_a_new_dataset_over_the_frozen_plan(spark, eng, monkeypatch):
     """A replay returns a different DataFrame whose plan scans Parquet and
     runs as many stages as the first execution — a design that kept the
     first DataFrame would reuse its shuffle and run fewer. Nothing on the
-    routing or scan-building path runs."""
+    routing or scan-building path runs. The layout is planned with Spark's
+    file splits (bound 0): read as one partition it has no shuffle."""
+    monkeypatch.setattr(router, "ONE_PARTITION_ROWS", 0)
     first = eng.sql(REAGG_SQL)
     assert eng.last_decision.kind == "routed"
     assert eng.last_decision.analyzed is not None
